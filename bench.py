@@ -267,13 +267,18 @@ def main() -> None:
     slow_trigger_s = float(os.environ.get("SPARK_GRAFT_SLOW_DUMP_S", "10"))
     slow_dumps: dict[str, str] = {}
 
-    def _watchdog(name: str, t_start: float, done: threading.Event) -> None:
-        typical = timings.get(name)  # min of prior runs this session
+    def _watchdog(
+        name: str, run: int, done_runs: list, t_start: float, done: threading.Event
+    ) -> None:
+        # typical = the in-flight query's completed runs (``timings`` is
+        # only set after all of them, so it never held this query)
+        typical = min(done_runs, default=None)
         thresh = max(slow_trigger_s, 4 * typical) if typical else slow_trigger_s
         while not done.wait(0.25):
             if time.perf_counter() - t_start < thresh:
                 continue
-            path = f"/tmp/bench_slow_dump_{name}.txt"
+            # one file per run, truncated by this session's first shot
+            path = f"/tmp/bench_slow_dump_{name}_run{run}.txt"
             try:
                 import faulthandler
 
@@ -284,7 +289,7 @@ def main() -> None:
                         text=True,
                         timeout=30,
                     ).stdout
-                    with open(path, "a") as fh:
+                    with open(path, "a" if shot else "w") as fh:
                         fh.write(
                             f"# {name} shot {shot} at +"
                             f"{time.perf_counter() - t_start:.1f}s "
@@ -310,13 +315,13 @@ def main() -> None:
         gc0 = _gc_ms()
         jit0 = _jit_ms()
         try:
-            for _ in range(n_runs):
+            for run in range(n_runs):
                 t0 = time.perf_counter()
                 done_evt = threading.Event()
                 if jvm_pid:
                     threading.Thread(
                         target=_watchdog,
-                        args=(name, t0, done_evt),
+                        args=(name, run, list(runs), t0, done_evt),
                         daemon=True,
                     ).start()
                 try:

@@ -142,9 +142,10 @@ def q13_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The real streaming bus run end-to-end (availableNow), then its
     sink contents returned for the differential check.
 
-    Sinks are ParquetSink (executor-parallel, partitioned by dest) —
-    rows never funnel through the driver, so the same pipeline shape
-    holds when the bus carries 100 TB; the golden-output test keeps
+    Sinks are ParquetSink (partitioned by dest): a small replay takes
+    its Arrow tier, a large one its executor-parallel Spark tier, so
+    the same pipeline shape holds when the bus carries 100 TB; the
+    golden-output test keeps
     MemorySink for the reference's basic-sink semantics."""
     base = run_bus_pipeline(spark, sf_dir)
 

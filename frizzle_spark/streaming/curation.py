@@ -98,6 +98,9 @@ LOCAL_DECIDE_MAX_DOCS = 1 << 16
 # write): the exact UTF-8 size is known before the pull — octet_length
 # rides the decide collect — so the gate is measured, not estimated.
 LOCAL_TEXT_MAX_BYTES = 256 << 20
+# (name, pyarrow type) columns of the local tier's corpus and DLQ writes
+_CORPUS_COLS = (("doc_id", "int64"), ("text", "string"))
+_DLQ_COLS = (("doc_id", "int64"), ("reason", "string"), ("dup_of", "int64"))
 
 
 def _decide_local(
@@ -363,58 +366,6 @@ def _decide_local(
     return assign, rows, kept_sig, kept_text, len(doc_ids), n_kept, batch_bytes
 
 
-def _write_dlq_local(rows: list, out_base: str, batch_id: int) -> None:
-    """Driver-side DLQ write for the local-decide tier: the routed rows
-    are already in hand, so the per-batch partition overwrite is one
-    pyarrow file instead of a Spark write job.  Same layout and
-    overwrite-idempotence as the distributed write."""
-    import shutil
-
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    dlq = [(d, reason, dup_of) for d, dest, reason, dup_of in rows
-           if dest == "dlq"]
-    target = os.path.join(out_base, "dlq", f"batch_id={batch_id}")
-    shutil.rmtree(target, ignore_errors=True)
-    os.makedirs(target, exist_ok=True)
-    tb = pa.table(
-        {
-            "doc_id": pa.array([r[0] for r in dlq], pa.int64()),
-            "reason": pa.array([r[1] for r in dlq], pa.string()),
-            "dup_of": pa.array([r[2] for r in dlq], pa.int64()),
-        }
-    )
-    pq.write_table(tb, os.path.join(target, "part-local-0.parquet"))
-
-
-def _write_corpus_local(
-    kept: list[tuple[int, str]], out_base: str, batch_id: int
-) -> None:
-    """Driver-side corpus write (round 11, VERDICT r10 #4): under the
-    local-decide cap the survivor TEXT is already on the driver (it
-    rode the decide collect), so the per-batch partition overwrite is
-    one pyarrow file instead of a Spark write job — the last ~0.5 s of
-    fixed per-batch job overhead in the warm micro-batch.  Same layout,
-    same overwrite-idempotence unit as the distributed write;
-    read-identity is pinned by the forced-tier gates."""
-    import shutil
-
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    target = os.path.join(out_base, "corpus", f"batch_id={batch_id}")
-    shutil.rmtree(target, ignore_errors=True)
-    os.makedirs(target, exist_ok=True)
-    tb = pa.table(
-        {
-            "doc_id": pa.array([r[0] for r in kept], pa.int64()),
-            "text": pa.array([r[1] for r in kept], pa.string()),
-        }
-    )
-    pq.write_table(tb, os.path.join(target, "part-local-0.parquet"))
-
-
 def _decide_distributed(
     spark: SparkSession,
     batch: DataFrame,
@@ -534,6 +485,7 @@ def dedup_ingest_batch(
         minhash_signatures,
         shingles_of,
     )
+    from frizzle_spark.streaming.pipeline import arrow_filesystem, write_batch_rows
 
     profile = os.environ.get("FRIZZLE_CURATION_PROFILE") == "1"
     phases: dict[str, float] = {}
@@ -612,8 +564,9 @@ def dedup_ingest_batch(
         # otherwise the distributed write (text must not be collected
         # past the byte gate).  DLQ rows are pointers only.
         keep_set = None
+        out = arrow_filesystem(spark, out_base) if assign_rows is not None else None
         if kept_text is not None:
-            _write_corpus_local(kept_text, out_base, batch_id)
+            write_batch_rows(out, "corpus", batch_id, kept_text, _CORPUS_COLS)
         else:
             keep_set = assign.where(F.col("dest") == "corpus").select("doc_id")
             # the broadcast hint is safe only when the survivor count is
@@ -628,7 +581,8 @@ def dedup_ingest_batch(
             )
         _mark("corpus_write")
         if assign_rows is not None:
-            _write_dlq_local(assign_rows, out_base, batch_id)
+            dlq = [(d, why, of) for d, dest, why, of in assign_rows if dest == "dlq"]
+            write_batch_rows(out, "dlq", batch_id, dlq, _DLQ_COLS)
         else:
             assign.where(F.col("dest") == "dlq").select(
                 "doc_id", "reason", "dup_of"

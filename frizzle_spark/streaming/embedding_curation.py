@@ -156,12 +156,7 @@ def _write_emb_meta(out_base: str, meta: dict) -> None:
 
 
 def _lists_bytes(index_base: str) -> int:
-    total = 0
-    for root, _dirs, files in os.walk(os.path.join(index_base, "lists")):
-        for f in files:
-            if f.endswith(".parquet"):
-                total += os.stat(os.path.join(root, f)).st_size
-    return total
+    return sum(size for _, size in _lists_manifest(index_base))
 
 
 def _read_lists_local(index_base: str) -> tuple[np.ndarray, np.ndarray]:
@@ -205,7 +200,8 @@ def _lists_manifest(index_base: str) -> tuple:
 # re-reading ~100 new files/batch).  Coherence is by manifest signature
 # (one os.walk per batch, ~ms), so restarts, compaction, redelivery
 # rewrites and out-of-process writers all invalidate correctly; the
-# appending batch extends it in place after writing its own files.
+# appending batch extends it in place only if nothing but its own files
+# changed the manifest (``_young_cache_extend``).
 _YOUNG_CACHE: dict[str, dict] = {}
 
 
@@ -220,26 +216,29 @@ def _young_index(index_base: str) -> tuple[np.ndarray, np.ndarray]:
 
 
 def _young_cache_extend(
-    index_base: str, new_ids: np.ndarray, new_u: np.ndarray
+    index_base: str, new_ids: np.ndarray, new_u: np.ndarray, batch_id: int
 ) -> None:
-    """Fold a just-appended survivor block into the cached matrix (and
-    refresh the signature to the post-append manifest) so the next
-    batch's probe needs no re-read.  No-op when the cache is cold."""
+    """Fold a just-appended survivor block into the cached matrix and
+    stamp the post-append manifest, so the next batch's probe needs no
+    re-read.  Only a block that was fresh before the append is
+    extended: its signature must equal the post-append manifest minus
+    this batch's own files.  Any other difference (an out-of-process
+    write, a redelivered batch's earlier files) drops the block, and the
+    next probe reloads it.  No-op when the cache is cold."""
     c = _YOUNG_CACHE.get(index_base)
     if c is None or not len(new_ids):
         return
+    own = _own_index_file(batch_id)
+    sig = _lists_manifest(index_base)
+    if c["sig"] != tuple(e for e in sig if os.path.basename(e[0]) != own):
+        del _YOUNG_CACHE[index_base]
+        return
     if len(c["ids"]):
-        # a same-process redelivery re-appends the identical survivor
-        # block (same filenames, same content): keep the cache a SET
-        fresh = ~np.isin(new_ids, c["ids"])
-        if fresh.any():
-            c["ids"] = np.concatenate(
-                [c["ids"], new_ids[fresh].astype(np.int64)]
-            )
-            c["mat"] = np.vstack([c["mat"], new_u[fresh]])
+        c["ids"] = np.concatenate([c["ids"], new_ids.astype(np.int64)])
+        c["mat"] = np.vstack([c["mat"], new_u])
     else:
         c["ids"], c["mat"] = new_ids.astype(np.int64), new_u.copy()
-    c["sig"] = _lists_manifest(index_base)
+    c["sig"] = sig
 
 
 # Per-cluster probe-block cache (r13, VERDICT r12 #9): past the young
@@ -253,9 +252,10 @@ def _young_cache_extend(
 # checked per cluster by the same (file, size) manifest signature the
 # young cache uses (appends, compaction, retrain and out-of-process
 # writers all invalidate correctly); the appending batch extends its
-# own touched blocks in place.  Result identity with the broadcast tier
-# is exact — same centroid routing, same exclude masking, same
-# min-old_id hit semantics — and pytest-gated.  A batch whose probed
+# own touched blocks in place under the young cache's freshness rule.
+# Result identity with the broadcast tier is exact — same centroid
+# routing, same exclude masking, same min-old_id hit semantics — and
+# pytest-gated.  A batch whose probed
 # working set exceeds the budget falls back to the broadcast tier for
 # that batch, so the 100 TB posture is unchanged: the index side never
 # shuffles, and the driver holds at most the budget.
@@ -318,17 +318,21 @@ def _cluster_blocks(index_base: str, wanted: list[int]) -> dict | None:
 
     budget = EMB_CLUSTER_CACHE_MAX_BYTES
     cache = _CLUSTER_CACHE.setdefault(index_base, OrderedDict())
-    plan, est = [], 0
+    plan, cold = [], 0
     for c in wanted:
         sig = _cluster_manifest(index_base, c)
         blk = cache.get(c)
-        if blk is not None and blk["sig"] == sig:
-            est += blk["bytes"]
-            plan.append((c, sig, blk))
-        else:
-            est += 2 * sum(s for _, s in sig)
-            plan.append((c, sig, None))
-    if est > budget:
+        if blk is not None and blk["sig"] != sig:
+            del cache[c]  # stale: reloaded below, or refused
+            blk = None
+        if blk is None:
+            cold += 2 * sum(s for _, s in sig)
+        plan.append((c, sig, blk))
+    # trim the LRU before the gate, so a refusal never leaves stale or
+    # unprobed blocks holding more than the budget
+    _trim_lru(cache, budget - cold, keep=set(wanted))
+    if sum(b["bytes"] for b in cache.values()) + cold > budget:
+        _trim_lru(cache, budget)
         return None
     blocks: dict[int, dict] = {}
     for c, sig, blk in plan:
@@ -343,14 +347,18 @@ def _cluster_blocks(index_base: str, wanted: list[int]) -> dict | None:
             cache[c] = blk
         cache.move_to_end(c)
         blocks[c] = blk
-    used = sum(b["bytes"] for b in cache.values())
-    if used > budget:
-        # LRU-evict blocks outside the probed set until within budget
-        for c_old in [k for k in cache if k not in blocks]:
-            used -= cache.pop(c_old)["bytes"]
-            if used <= budget:
-                break
+    _trim_lru(cache, budget, keep=set(blocks))
     return blocks
+
+
+def _trim_lru(cache, budget: int, keep: set = frozenset()) -> None:
+    """Evict blocks outside ``keep``, least recently used first, until
+    the cache holds at most ``budget`` bytes (or only ``keep`` is left)."""
+    used = sum(b["bytes"] for b in cache.values())
+    for c in [k for k in cache if k not in keep]:
+        if used <= budget:
+            return
+        used -= cache.pop(c)["bytes"]
 
 
 def _cluster_cache_extend(
@@ -358,33 +366,34 @@ def _cluster_cache_extend(
     kept_ids: np.ndarray,
     kept_u: np.ndarray,
     assign: np.ndarray | None,
+    batch_id: int,
 ) -> None:
     """Fold a just-appended survivor block into the touched clusters'
-    cached blocks (and refresh their signatures to the post-append
-    manifests) so the next batch's probe re-reads nothing.  No-op for
-    clusters not currently cached."""
+    cached blocks, under the young cache's rule: a block is extended
+    (and stamped with its post-append manifest) only when its signature
+    equals that manifest minus this batch's own file; otherwise it is
+    dropped.  No-op for clusters not currently cached."""
     cache = _CLUSTER_CACHE.get(index_base)
     if not cache or assign is None or not len(kept_ids):
         return
-    for c in np.unique(assign):
-        blk = cache.get(int(c))
+    own = _own_index_file(batch_id)
+    for c in map(int, np.unique(assign)):
+        blk = cache.get(c)
         if blk is None:
             continue
+        sig = _cluster_manifest(index_base, c)
+        if blk["sig"] != tuple(e for e in sig if e[0] != own):
+            del cache[c]
+            continue
         mask = assign == c
-        nid = kept_ids[mask].astype(np.int64)
-        nu = kept_u[mask]
+        nid, nu = kept_ids[mask].astype(np.int64), kept_u[mask]
         if len(blk["ids"]):
-            # same-process redelivery re-appends the identical block
-            # (same filenames, same content): keep the block a SET
-            fresh = ~np.isin(nid, blk["ids"])
-            nid, nu = nid[fresh], nu[fresh]
-            if len(nid):
-                blk["ids"] = np.concatenate([blk["ids"], nid])
-                blk["mat"] = np.vstack([blk["mat"], nu])
-        elif len(nid):
+            blk["ids"] = np.concatenate([blk["ids"], nid])
+            blk["mat"] = np.vstack([blk["mat"], nu])
+        else:
             blk["ids"], blk["mat"] = nid, nu.copy()
         blk["bytes"] = blk["ids"].nbytes + blk["mat"].nbytes
-        blk["sig"] = _cluster_manifest(index_base, int(c))
+        blk["sig"] = sig
 
 
 def _blocked_max_hits(
@@ -800,9 +809,14 @@ def _append_index_local(
                     ),
                 }
             ),
-            os.path.join(target, f"part-embbatch-{batch_id}.parquet"),
+            os.path.join(target, _own_index_file(batch_id)),
         )
     return assign
+
+
+def _own_index_file(batch_id: int) -> str:
+    """The list file a batch appends in each cluster it touches."""
+    return f"part-embbatch-{batch_id}.parquet"
 
 
 def _index_nprobe(index_base: str) -> int:
@@ -830,49 +844,6 @@ def _sync_index_n_vectors(index_base: str, n_vectors: int) -> None:
     with open(tmp, "w") as fh:
         json.dump(meta, fh)
     os.replace(tmp, path)
-
-
-def _write_emb_sinks_local(
-    rows: list, ids: np.ndarray, vecs: list, out_base: str, batch_id: int
-) -> None:
-    """Per-batch overwrite of corpus + DLQ partitions, driver-side
-    pyarrow (the whole batch is already in hand on the local tier)."""
-    import shutil
-
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    vec_of = dict(zip((int(i) for i in ids), vecs))
-    kept = [r for r in rows if r[1] == "corpus"]
-    target = os.path.join(out_base, "corpus", f"batch_id={batch_id}")
-    shutil.rmtree(target, ignore_errors=True)
-    os.makedirs(target, exist_ok=True)
-    pq.write_table(
-        pa.table(
-            {
-                "vec_id": pa.array([r[0] for r in kept], pa.int64()),
-                "embedding": pa.array(
-                    [vec_of[r[0]] for r in kept], pa.list_(pa.float32())
-                ),
-            }
-        ),
-        os.path.join(target, "part-local-0.parquet"),
-    )
-    dlq = [r for r in rows if r[1] == "dlq"]
-    target = os.path.join(out_base, "dlq", f"batch_id={batch_id}")
-    shutil.rmtree(target, ignore_errors=True)
-    os.makedirs(target, exist_ok=True)
-    pq.write_table(
-        pa.table(
-            {
-                "vec_id": pa.array([r[0] for r in dlq], pa.int64()),
-                "reason": pa.array([r[2] for r in dlq], pa.string()),
-                "dup_of": pa.array([r[3] for r in dlq], pa.int64()),
-                "cos_sim": pa.array([r[4] for r in dlq], pa.float64()),
-            }
-        ),
-        os.path.join(target, "part-local-0.parquet"),
-    )
 
 
 def embedding_ingest_batch(
@@ -950,6 +921,9 @@ def embedding_ingest_batch(
                     index_base, u[elig_rows], threshold, batch_set
                 )
             else:
+                # past the young cap its cached copy of the whole index
+                # is never probed again: free it instead of extending it
+                _YOUNG_CACHE.pop(index_base, None)
                 np_eff = (
                     nprobe if nprobe is not None else _index_nprobe(index_base)
                 )
@@ -1037,7 +1011,23 @@ def embedding_ingest_batch(
             )
 
     # -- route (idempotent per-batch partition overwrite) ---------------
-    _write_emb_sinks_local(rows, all_ids, all_vecs, out_base, batch_id)
+    import pyarrow as pa
+
+    from frizzle_spark.streaming.pipeline import arrow_filesystem, write_batch_rows
+
+    vec_of = dict(zip(map(int, all_ids), all_vecs))
+    kept = [(r[0], vec_of[r[0]]) for r in rows if r[1] == "corpus"]
+    dlq = [(r[0], *r[2:]) for r in rows if r[1] == "dlq"]
+    corpus_cols = (("vec_id", "int64"), ("embedding", pa.list_(pa.float32())))
+    dlq_cols = (
+        ("vec_id", "int64"),
+        ("reason", "string"),
+        ("dup_of", "int64"),
+        ("cos_sim", "float64"),
+    )
+    out = arrow_filesystem(spark, out_base)
+    write_batch_rows(out, "corpus", batch_id, kept, corpus_cols)
+    write_batch_rows(out, "dlq", batch_id, dlq, dlq_cols)
 
     # -- index the survivors (redelivery-guarded window, module doc) ----
     kept_set = set(kept_rows)
@@ -1050,8 +1040,8 @@ def embedding_ingest_batch(
             _bootstrap_index(index_base, kept_ids, kept_u)
     else:
         assign = _append_index_local(index_base, kept_ids, kept_u, batch_id)
-        _young_cache_extend(index_base, kept_ids, kept_u)
-        _cluster_cache_extend(index_base, kept_ids, kept_u, assign)
+        _young_cache_extend(index_base, kept_ids, kept_u, batch_id)
+        _cluster_cache_extend(index_base, kept_ids, kept_u, assign, batch_id)
 
     # -- commit ----------------------------------------------------------
     n_total_kept = int(meta.get("n_vecs_kept", 0)) + n_kept

@@ -21,9 +21,11 @@ drains in-flight work.  Spark mapping (SURVEY.md §3.2):
 * HandleShutdown      → ``handle_shutdown()``: SIGINT/SIGTERM →
                         FlushAndClose → user callback (options.go:105-135)
 
-Scale: the envelope never collects to the driver; routing is a column
-predicate, both sink writes are executor-parallel, and the only
-per-batch driver work is the commit.  Rate limiting (reference's
+Scale: routing is a column predicate.  A small micro-batch
+(``Pipeline._arrow_tier``) is collected through Arrow ONCE and written
+by the driver-side ``write_batch_partition``; a larger one, or one of
+unknown size (Kafka), never collects, and its sink writes stay
+executor-parallel Spark jobs.  Rate limiting (reference's
 buffer-500 backpressure, basic/source.go:13-16) maps to
 ``maxFilesPerTrigger`` / ``maxOffsetsPerTrigger`` on the source.
 """
@@ -39,6 +41,7 @@ from collections.abc import Callable
 from dataclasses import dataclass, field
 from typing import Any
 
+from py4j.protocol import Py4JJavaError
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
@@ -66,6 +69,15 @@ ENVELOPE = StructType(
 )
 
 DEFAULT_FLUSH_SECONDS = 30  # options.go:13-15
+
+# A micro-batch takes the Arrow tier when its input plan's sizeInBytes
+# is under this fraction of spark.driver.maxResultSize (16 MiB of 1g).
+# Measured per batch on 4 cores, Arrow vs Spark tier: random-payload
+# envelopes (1.2x Arrow expansion) 0.97 vs 1.51 s at 17 MiB, 1.71 vs
+# 2.35 s at 65 MiB; Zipf text (2.7x) 1.14 vs 1.32 s at 16 MiB but 2.80
+# vs 2.65 s at 65 MiB, with +510 MB driver Python peak.  A batch that
+# still overflows maxResultSize falls back after its collect.
+ARROW_TIER_MAX_RESULT_FRACTION = 1 / 64
 
 
 # ---------------------------------------------------------------- sources
@@ -120,13 +132,7 @@ def resolve_stream_input(
       instead; pass False only for a genuinely live directory that a
       producer fills later.
     """
-    jvm = spark._jvm
-    hconf = spark._jsc.hadoopConfiguration()
-
-    def _hpath(p: str):
-        return jvm.org.apache.hadoop.fs.Path(p)
-
-    fs = _hpath(path).getFileSystem(hconf)
+    _, fs, _hpath = _hadoop_fs(spark, path)
 
     def _is_dir(p: str) -> bool:
         hp = _hpath(p)
@@ -424,26 +430,110 @@ class CompactionInProgressError(RuntimeError):
     compaction of the same base_path (the clean-loser outcome)."""
 
 
+# ------------------------------------------------- batch-partition writer
+def _hadoop_fs(spark: SparkSession, base: str):
+    """(jvm, hadoop FileSystem, Path ctor) for ``base``'s scheme — the
+    same storage API the executors write through, so local paths, HDFS
+    and object stores all resolve correctly."""
+    jvm = spark._jvm
+    Path = jvm.org.apache.hadoop.fs.Path
+    return jvm, Path(base).getFileSystem(spark._jsc.hadoopConfiguration()), Path
+
+
+def arrow_filesystem(spark: SparkSession, base: str):
+    """(pyarrow FileSystem, path) for ``base``, or None where pyarrow has
+    no filesystem for its URI (``s3a://``, HDFS without libhdfs).  The
+    base is qualified through the Hadoop FileSystem first, so a
+    scheme-less path on a non-``file:`` defaultFS resolves to that
+    store, never to the driver's local disk."""
+    import pyarrow.fs as pafs
+
+    _, fs, Path = _hadoop_fs(spark, base)
+    try:
+        return pafs.FileSystem.from_uri(fs.makeQualified(Path(base)).toString())
+    except (OSError, ValueError, NotImplementedError):
+        return None
+
+
+def write_batch_partition(target, partition: str, table, batch_id: int) -> None:
+    """Replace ``partition`` under ``target`` (an ``arrow_filesystem``
+    result) with the Arrow ``table`` (partition columns belong in
+    ``partition``) as one unit — the driver-side twin of a dynamic
+    partition overwrite.  Publish protocol: write under a hidden staging
+    name (leading ``.``, no ``.parquet`` suffix: Spark, pyarrow.dataset,
+    ``glob('*.parquet')`` and the compactions' listings all skip it),
+    move it to ``part-<batch_id>.parquet``, then delete every other
+    entry of the partition — a Spark-tier write of the same batch id, or
+    a dead attempt's staged file.  A redelivered batch thus replaces its
+    own partition, as the Spark tier does."""
+    import pyarrow.fs as pafs
+    import pyarrow.parquet as pq
+
+    fs, root = target
+    d = f"{root.rstrip('/')}/{partition}"
+    name = f"part-{int(batch_id)}.parquet"
+    staged = f"{d}/.{name}.{uuid.uuid4().hex}.staging"
+    fs.create_dir(d, recursive=True)
+    pq.write_table(table, staged, filesystem=fs)
+    fs.move(staged, f"{d}/{name}")
+    for info in fs.get_file_info(pafs.FileSelector(d)):
+        if info.base_name == name:
+            continue
+        if info.type == pafs.FileType.Directory:
+            fs.delete_dir(info.path)
+        else:
+            fs.delete_file(info.path)
+
+
+def write_batch_rows(target, sink: str, batch_id: int, rows: list, schema) -> None:
+    """``rows`` (tuples in the order of ``schema``'s (name, pyarrow
+    type) pairs) as ``sink/batch_id=<id>`` under ``target`` — the
+    curation buses' per-batch sink write."""
+    import pyarrow as pa
+
+    if target is None:
+        raise ValueError(f"pyarrow has no filesystem for the {sink} sink's base")
+    cols = list(zip(*rows)) or [()] * len(schema)
+    table = pa.table({n: pa.array(c, t) for (n, t), c in zip(schema, cols)})
+    write_batch_partition(target, f"{sink}/batch_id={batch_id}", table, batch_id)
+
+
 class ParquetSink:
-    """Durable sink: one parquet dir per destination (partition-parallel).
+    """Durable sink: one parquet dir per destination.
 
     Idempotent under micro-batch retries: when the pipeline passes a
-    ``batch_id``, rows land under ``dest=<d>/_batch=<id>/`` via DYNAMIC
-    partition overwrite — a replayed batch (checkpoint uncommitted →
+    ``batch_id``, rows land under ``dest=<d>/_batch=<id>/`` and that
+    partition is REPLACED — a replayed batch (checkpoint uncommitted →
     foreachBatch re-invoked with the SAME batch_id) rewrites exactly its
     own partitions instead of appending duplicates.  That upgrades the
-    file output from at-least-once to effectively-once CONTENTS while
-    keeping the write one executor-parallel job for all destinations
-    (never a per-dest loop).  Without a batch_id (plain batch use) it
-    appends, as before.
+    file output from at-least-once to effectively-once CONTENTS.
+    Without a batch_id (plain batch use) it appends, as before.
+
+    Two tiers write the same layout (``read_current`` / ``compact``
+    read either back identically).  Given a DataFrame: one
+    executor-parallel job with DYNAMIC partition overwrite.  Given a
+    ``pyarrow.Table`` (what ``Pipeline`` passes for a batch under
+    ``ARROW_TIER_MAX_RESULT_FRACTION`` of ``spark.driver.maxResultSize``,
+    on a filesystem pyarrow opens): one ``write_batch_partition`` per
+    destination directory.
     """
 
     def __init__(self, base_path: str) -> None:
         self.base_path = base_path
 
+    def arrow_target(self, spark: SparkSession):
+        """``arrow_filesystem`` of base_path, resolved once per sink: the
+        py4j lookups behind it take ~4 ms, which every batch would pay."""
+        if not hasattr(self, "_arrow_target"):
+            self._arrow_target = arrow_filesystem(spark, self.base_path)
+        return self._arrow_target
+
     def write(
         self, df: DataFrame, default_dest: str, batch_id: int | None = None
     ) -> None:
+        if not isinstance(df, DataFrame):
+            self._write_arrow(df, default_dest, batch_id)
+            return
         dest_col = F.coalesce(F.col("dest"), F.lit(default_dest))
         out = df.withColumn("dest", dest_col)
         if batch_id is None:
@@ -456,6 +546,32 @@ class ParquetSink:
             .partitionBy("dest", "_batch")
             .parquet(self.base_path)
         )
+
+    def _write_arrow(self, table, default_dest: str, batch_id: int) -> None:
+        """Arrow tier: one partition replace per directory that Spark's
+        own partition-path escaping gives.  Dest values that escape to
+        one directory (NULL, '' and ``__HIVE_DEFAULT_PARTITION__``) are
+        written together, as the Spark tier writes them."""
+        import pyarrow as pa
+        import pyarrow.compute as pc
+
+        spark = SparkSession.active()
+        dest = table["dest"]
+        if default_dest is not None:
+            dest = pc.fill_null(dest, default_dest)
+        body = table.drop_columns(["dest"])
+        paths = spark._jvm.org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
+        target = self.arrow_target(spark)
+        groups: dict[str, list] = {}
+        for d in pc.unique(dest).to_pylist():
+            groups.setdefault(paths.getPartitionPathString("dest", d), []).append(d)
+        for path, ds in groups.items():
+            write_batch_partition(
+                target,
+                f"{path}/_batch={int(batch_id)}",
+                body.filter(pc.is_in(dest, value_set=pa.array(ds, dest.type))),
+                batch_id,
+            )
 
     # -------------------------------------------------- compaction
     # Manifest/generation protocol — NO directory renames anywhere, so
@@ -480,13 +596,7 @@ class ParquetSink:
     LOCK_TTL_SECONDS = 3600.0
 
     def _fs(self, spark: SparkSession):
-        """(jvm, hadoop FileSystem, Path ctor) for base_path's scheme —
-        the same storage API the executors write through, so local
-        paths, HDFS and object stores all resolve correctly."""
-        jvm = spark._jvm
-        path = jvm.org.apache.hadoop.fs.Path(self.base_path)
-        fs = path.getFileSystem(spark._jsc.hadoopConfiguration())
-        return jvm, fs, jvm.org.apache.hadoop.fs.Path
+        return _hadoop_fs(spark, self.base_path)
 
     def _read_manifest(self, spark: SparkSession) -> dict:
         jvm, fs, Path = self._fs(spark)
@@ -897,99 +1007,154 @@ class Pipeline:
     def _run_batch(self, batch_df: DataFrame, batch_id: int) -> None:
         # One micro-batch ≙ one slice of the consume loop.  Checkpoint
         # commit after this returns ≙ Ack for every routed row.
+        # Persisted for both tiers: every job then scans the source once,
+        # so the progress record's numInputRows counts each row once.
         batch_df = batch_df.persist()
         try:
-            df = self.process(batch_df) if self.process else batch_df
-            # NULL-normalize the fail predicate ONCE: a predicate over a
-            # nullable column evaluates NULL on some rows, and both
-            # filter(p) and filter(~p) drop NULL — the row would silently
-            # land in neither the sink nor the DLQ.  NULL ≙ not failed,
-            # so the {sink, DLQ} partition invariant (common/unacked.go
-            # contract) holds for every row.
-            has_fail = self.fail_predicate is not None
-            pred = (
-                F.coalesce(self.fail_predicate.cast("boolean"), F.lit(False))
-                if has_fail
-                else F.lit(False)
-            )
+            if not (
+                self._arrow_tier(batch_df) and self._route(batch_df, batch_id, True)
+            ):
+                self._route(batch_df, batch_id, arrow=False)
+        finally:
+            batch_df.unpersist()
 
-            # Zero extra jobs per batch: rcv/fail/unrouted counters ride
-            # the sink write via a CollectMetrics (observe) node placed
-            # BELOW the routing filters, so the full batch flows through
-            # it during the main sink's action (SURVEY §2.1/O19's
-            # df.observe mapping; round 1 ran a separate aggregate job
-            # per trigger instead).
-            # Guard (rides the same observe — zero extra jobs): when the
-            # main sink and the DLQ share one ParquetSink base, an
-            # ok-row routed to dest == dlq_dest would land via the main
-            # write and then be silently DELETED by the DLQ's dynamic
-            # overwrite of that same (dest, _batch) partition.  Count
-            # such collisions and fail the batch instead of losing rows.
-            dlq_dest = self.fail_sink[1] if self.fail_sink is not None else None
-            dlq_shares_storage = (
-                self.fail_sink is not None
-                and isinstance(self.sink, ParquetSink)
-                and isinstance(self.fail_sink[0], ParquetSink)
-                and self.fail_sink[0].base_path == self.sink.base_path
-            )
-            collide = (
-                F.count(
-                    F.when(
-                        ~pred
-                        & (
-                            F.coalesce(F.col("dest"), F.lit(self.default_dest))
-                            == F.lit(dlq_dest)
-                        ),
-                        True,
-                    )
+    def _arrow_tier(self, batch_df: DataFrame) -> bool:
+        """Every sink is a ParquetSink pyarrow opens, and the input plan's
+        sizeInBytes (a file index holds its file sizes; an unknown size,
+        as on Kafka, reads as the default statistic) is under
+        ``ARROW_TIER_MAX_RESULT_FRACTION`` of maxResultSize (1g if 0)."""
+        sinks = [self.sink] + ([self.fail_sink[0]] if self.fail_sink else [])
+        if not all(
+            isinstance(s, ParquetSink) and s.arrow_target(self.spark)
+            for s in sinks
+        ):
+            return False
+        size = int(batch_df._jdf.queryExecution().analyzed().stats().sizeInBytes())
+        jss = self.spark._jsparkSession
+        max_result = jss.sparkContext().conf().getSizeAsBytes(
+            "spark.driver.maxResultSize", "1g"
+        )
+        return size < jss.sessionState().conf().defaultSizeInBytes() and (
+            size < ARROW_TIER_MAX_RESULT_FRACTION * (max_result or 1 << 30)
+        )
+
+    def _route(self, batch_df: DataFrame, batch_id: int, arrow: bool) -> bool:
+        """Route one batch to the sink and the DLQ; both tiers build one
+        plan whose counters ride one observe node.  The Spark tier writes
+        each side as its own job.  The Arrow tier collects
+        ``chain(send, ok) ∪ failed`` (rows tagged ``_fail``) in ONE job;
+        it returns False, having written nothing, when a send transform
+        changed a column type the union would widen or the collect
+        overflowed ``spark.driver.maxResultSize``."""
+        df = self.process(batch_df) if self.process else batch_df
+        # NULL-normalize the fail predicate ONCE: a predicate over a
+        # nullable column evaluates NULL on some rows, and both
+        # filter(p) and filter(~p) drop NULL — the row would silently
+        # land in neither the sink nor the DLQ.  NULL ≙ not failed,
+        # so the {sink, DLQ} partition invariant (common/unacked.go
+        # contract) holds for every row.
+        has_fail = self.fail_predicate is not None
+        pred = (
+            F.coalesce(self.fail_predicate.cast("boolean"), F.lit(False))
+            if has_fail
+            else F.lit(False)
+        )
+
+        # Zero extra jobs per batch: rcv/fail/unrouted counters ride the
+        # batch's first job via a CollectMetrics (observe) node BELOW the
+        # routing filters and send transforms (SURVEY §2.1/O19's
+        # df.observe mapping).  Guard (same observe): when the sink and
+        # the DLQ share one ParquetSink base, an ok-row routed to
+        # dest == dlq_dest would be silently DELETED by the DLQ's
+        # overwrite of that (dest, _batch) partition — fail instead.
+        dlq_dest = self.fail_sink[1] if self.fail_sink is not None else None
+        dlq_shares_storage = (
+            self.fail_sink is not None
+            and isinstance(self.sink, ParquetSink)
+            and isinstance(self.fail_sink[0], ParquetSink)
+            and self.fail_sink[0].base_path == self.sink.base_path
+        )
+        collide = (
+            F.count(
+                F.when(
+                    ~pred
+                    & (
+                        F.coalesce(F.col("dest"), F.lit(self.default_dest))
+                        == F.lit(dlq_dest)
+                    ),
+                    True,
                 )
-                if dlq_shares_storage
-                else F.count(F.lit(None))
             )
-            obs = Observation(f"frizzle-batch-{batch_id}")
-            df = df.observe(
-                obs,
-                F.count(F.lit(1)).alias("rcv"),
-                F.count(F.when(pred, True)).alias("fail"),
-                F.count(F.when(~pred & F.col("dest").isNull(), True)).alias(
-                    "unrouted"
-                ),
-                collide.alias("collide"),
-            )
-            failed = df.filter(pred) if has_fail else None
-            ok = df.filter(~pred) if has_fail else df
+            if dlq_shares_storage
+            else F.count(F.lit(None))
+        )
+        obs = Observation(f"frizzle-batch-{batch_id}")
+        df = df.observe(
+            obs,
+            F.count(F.lit(1)).alias("rcv"),
+            F.count(F.when(pred, True)).alias("fail"),
+            F.count(F.when(~pred & F.col("dest").isNull(), True)).alias("unrouted"),
+            collide.alias("collide"),
+        )
+        failed = (
+            df.filter(pred).withColumn("dest", F.lit(dlq_dest))
+            if has_fail and self.fail_sink is not None
+            else None
+        )
+        ok = df.filter(~pred) if has_fail else df
 
-            to_send = ok.where(F.col("dest").isNotNull()) if self.drop_unrouted else ok
-            to_send = chain([t.send for t in self.transformers], to_send)
-            self.sink.write(to_send, self.default_dest, batch_id=batch_id)
+        to_send = ok.where(F.col("dest").isNotNull()) if self.drop_unrouted else ok
+        to_send = chain([t.send for t in self.transformers], to_send)
 
-            counts = obs.get  # resolved by the sink job just finished
-            if dlq_shares_storage and counts["collide"]:
+        def counts() -> dict:
+            c = obs.get  # resolved by the batch's first job
+            if dlq_shares_storage and c["collide"]:
                 raise ValueError(
-                    f"batch {batch_id}: {counts['collide']} ok-row(s) routed to "
+                    f"batch {batch_id}: {c['collide']} ok-row(s) routed to "
                     f"dest={dlq_dest!r}, which is also the DLQ destination on the "
                     "SAME ParquetSink base — the DLQ's partition overwrite would "
                     "silently delete them.  Use a distinct DLQ base_path or dest."
                 )
-            n_rcv, n_fail = counts["rcv"], counts["fail"]
-            n_ok = n_rcv - n_fail
-            n_send = n_ok - counts["unrouted"] if self.drop_unrouted else n_ok
-            self.stats.increment(M.RCV, n_rcv)
-            self.stats.increment(M.SEND, n_send)
-            self.stats.increment(M.ACK, n_ok)
+            return c
 
-            if failed is not None and n_fail:
-                self.stats.increment(M.FAIL, n_fail)
-                if self.fail_sink is not None:
-                    dlq, dlq_dest = self.fail_sink
-                    dlq.write(
-                        failed.withColumn("dest", F.lit(dlq_dest)),
-                        dlq_dest,
-                        batch_id=batch_id,
-                    )
-                    self.stats.increment(M.FAILSEND, n_fail)
-        finally:
-            batch_df.unpersist()
+        if arrow:
+            import pyarrow.compute as pc
+
+            both = to_send.withColumn("_fail", F.lit(False))
+            if failed is not None:
+                types = {f.name: f.dataType for f in failed.schema}
+                sent = to_send.schema
+                if any(types.get(f.name, f.dataType) != f.dataType for f in sent):
+                    return False
+                both = both.unionByName(
+                    failed.withColumn("_fail", F.lit(True)), allowMissingColumns=True
+                )
+            try:
+                tb = both.toArrow()
+            except Py4JJavaError as exc:
+                if "maxResultSize" not in str(exc):
+                    raise
+                return False
+            counts()  # a collision fails the batch before anything is written
+            to_send = tb.filter(pc.invert(tb["_fail"])).select(to_send.columns)
+            if failed is not None:
+                failed = tb.filter(tb["_fail"]).select(failed.columns)
+
+        self.sink.write(to_send, self.default_dest, batch_id=batch_id)
+        c = counts()
+        n_rcv, n_fail = c["rcv"], c["fail"]
+        n_ok = n_rcv - n_fail
+        n_send = n_ok - c["unrouted"] if self.drop_unrouted else n_ok
+        self.stats.increment(M.RCV, n_rcv)
+        self.stats.increment(M.SEND, n_send)
+        self.stats.increment(M.ACK, n_ok)
+
+        if has_fail and n_fail:
+            self.stats.increment(M.FAIL, n_fail)
+            if failed is not None:
+                self.fail_sink[0].write(failed, dlq_dest, batch_id=batch_id)
+                self.stats.increment(M.FAILSEND, n_fail)
+        return True
 
     # ≙ Init's consume goroutine start (frizzle.go:72-74)
     def start(

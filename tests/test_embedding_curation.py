@@ -334,6 +334,65 @@ def test_cluster_cache_extend_matches_cold_reload(spark, bases, monkeypatch):
     _hits_equal(warm, cold)
 
 
+@pytest.mark.parametrize("tier", ["young", "cluster"])
+def test_cache_extend_drops_block_written_between_probe_and_append(
+    spark, bases, monkeypatch, tier
+):
+    # an external writer adds a vector to a cached cluster after one
+    # batch's probe and before its append: the append must not stamp
+    # that file as cached, so the next batch's probe finds the vector
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    if tier == "cluster":
+        monkeypatch.setattr(EC, "EMB_PROBE_LOCAL_MAX_BYTES", 0)
+    EC._YOUNG_CACHE.clear()
+    EC._CLUSTER_CACHE.clear()
+    index, out = bases
+    base = _mk_vecs(50)
+    ext = _mk_vecs(1, seed=99)[0]
+    _ingest(spark, bases, [(range(40), base[:40])])
+    append = EC._append_index_local
+
+    def external_write_then_append(index_base, kept_ids, kept_u, batch_id, cent=None):
+        c = int(np.argmax(EC._load_centroids(index_base) @ kept_u[0]))
+        pq.write_table(
+            pa.table(
+                {
+                    "vec_id": pa.array([7000], pa.int64()),
+                    "u": pa.array([list(map(float, ext))], pa.list_(pa.float64())),
+                }
+            ),
+            os.path.join(index_base, "lists", f"cluster={c}", "part-ext.parquet"),
+        )
+        return append(index_base, kept_ids, kept_u, batch_id, cent)
+
+    monkeypatch.setattr(EC, "_append_index_local", external_write_then_append)
+    EC.embedding_ingest_batch(
+        spark, _df(spark, range(40, 50), base[40:50]), index, out, 1, nprobe="all"
+    )
+    monkeypatch.setattr(EC, "_append_index_local", append)
+    EC.embedding_ingest_batch(
+        spark, _df(spark, [8000], [_noisy(ext)]), index, out, 2, nprobe="all"
+    )
+    rows = {vid: rest for vid, *rest in _assignment_rows(spark, out)}
+    assert rows[8000] == ["dlq", "dup_index", 7000]
+
+
+def test_cluster_cache_trims_before_refusing(monkeypatch):
+    # a refused working set must not leave the cache over its budget
+    from collections import OrderedDict
+
+    monkeypatch.setattr(EC, "EMB_CLUSTER_CACHE_MAX_BYTES", 100)
+    blk = {"sig": ("stale",), "ids": np.zeros(0), "mat": np.zeros(0), "bytes": 80}
+    EC._CLUSTER_CACHE.clear()
+    EC._CLUSTER_CACHE["/nowhere"] = OrderedDict({0: dict(blk), 1: dict(blk)})
+    monkeypatch.setattr(EC, "_cluster_manifest", lambda base, c: (("f", 60),))
+    assert EC._cluster_blocks("/nowhere", [2]) is None
+    assert sum(b["bytes"] for b in EC._CLUSTER_CACHE["/nowhere"].values()) <= 100
+    EC._CLUSTER_CACHE.clear()
+
+
 def test_pruned_probe_default_nprobe_catches_planted(
     spark, bases, monkeypatch
 ):

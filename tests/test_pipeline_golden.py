@@ -6,12 +6,14 @@ ported (frizzle_integration_test.go:82-131) plus transformer matrix
 from __future__ import annotations
 
 import os
+import shutil
 import tempfile
 
 import pytest
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
     BinaryType,
+    IntegerType,
     StringType,
     StructField,
     StructType,
@@ -181,6 +183,9 @@ def test_pipeline_chaining(spark, corpus_dir, tmp_path):
     )
     pipe_a.start()
     pipe_a.stop(flush_timeout=120)
+    # the Arrow tier's one collect scans the batch once: the progress
+    # record counts every input row once
+    assert sum(p["numInputRows"] for p in pipe_a.query.recentProgress) == 5
 
     # bus B consumes only bus A's 'main' destination, upper-cases payloads
     sink_b = MemorySink()
@@ -420,8 +425,30 @@ def test_parquet_sink_idempotent_on_batch_retry(spark, tmp_path):
     pipe._run_batch(df2, 8)  # a NEW batch appends
     assert spark.read.parquet(base).count() == 4
 
+    # Arrow tier (a file-backed batch knows its size): the same batch
+    # id redelivered through either tier replaces, never appends
+    fdf = _file_batch(spark, tmp_path, df.collect())
+    pipe._run_batch(fdf, 7)  # Spark-tier files of batch 7 are replaced
+    pipe._run_batch(fdf, 7)
+    assert os.listdir(f"{base}/dest=main/_batch=7") == ["part-7.parquet"]
+    assert spark.read.parquet(base).count() == 4
+    pipe._run_batch(df, 7)  # and back: the Spark tier replaces Arrow files
+    assert spark.read.parquet(base).count() == 4
+    assert "part-7.parquet" not in os.listdir(f"{base}/dest=main/_batch=7")
 
-def _batch_sink(spark, tmp_path, n_batches=5):
+
+def _file_batch(spark, tmp_path, rows, schema=MSG_SCHEMA):
+    """``rows`` as a file-backed batch: its plan knows its byte size, so
+    ``Pipeline`` takes the Arrow tier for it (a driver-built
+    ``createDataFrame`` reads as unknown size and takes the Spark tier)."""
+    path = tempfile.mkdtemp(prefix="batch_", dir=str(tmp_path))
+    spark.createDataFrame(rows, schema).coalesce(1).write.mode(
+        "overwrite"
+    ).parquet(path)
+    return spark.read.parquet(path)
+
+
+def _batch_sink(spark, tmp_path, n_batches=5, arrow=False):
     from frizzle_spark.streaming.pipeline import ParquetSink
 
     base = str(tmp_path / "sink")
@@ -435,8 +462,11 @@ def _batch_sink(spark, tmp_path, n_batches=5):
         fail_predicate=F.col("id") == "fail",
     )
     for b in range(n_batches):
-        df = spark.createDataFrame(
-            [(f"a{b}", b"x", None, None), ("fail", b"z", None, None)], MSG_SCHEMA
+        rows = [(f"a{b}", b"x", None, None), ("fail", b"z", None, None)]
+        df = (
+            _file_batch(spark, tmp_path, rows)
+            if arrow
+            else spark.createDataFrame(rows, MSG_SCHEMA)
         )
         pipe._run_batch(df, b)
     return base, sink
@@ -564,6 +594,11 @@ def test_dlq_dest_collision_rejected_not_silently_deleted(spark, tmp_path):
     )
     with pytest.raises(ValueError, match="DLQ destination"):
         pipe._run_batch(ok, 0)
+    # the Arrow tier raises the same error, before it writes anything
+    shutil.rmtree(base)
+    with pytest.raises(ValueError, match="DLQ destination"):
+        pipe._run_batch(_file_batch(spark, tmp_path, ok.collect()), 0)
+    assert not os.path.exists(base)
     # distinct bases: same routing is fine
     sink2 = ParquetSink(str(tmp_path / "main_sink"))
     dlq2 = ParquetSink(str(tmp_path / "dlq_sink"))
@@ -578,6 +613,171 @@ def test_dlq_dest_collision_rejected_not_silently_deleted(spark, tmp_path):
     pipe2._run_batch(ok, 0)
     assert spark.read.parquet(sink2.base_path).count() == 1
     assert spark.read.parquet(dlq2.base_path).count() == 1
+    pipe2._run_batch(_file_batch(spark, tmp_path, ok.collect()), 1)
+    assert spark.read.parquet(sink2.base_path).count() == 2
+    assert spark.read.parquet(dlq2.base_path).count() == 2
+
+
+PRIO_SCHEMA = StructType(MSG_SCHEMA.fields + [StructField("prio", IntegerType())])
+
+
+@pytest.mark.parametrize(
+    "drop_unrouted,shared_dlq,default_dest",
+    [(True, True, "main"), (False, False, "main"), (False, False, None)],
+)
+def test_arrow_tier_matches_spark_tier(
+    spark, tmp_path, monkeypatch, drop_unrouted, shared_dlq, default_dest
+):
+    """The same file-backed batch through both tiers: identical
+    read_current rows and schema on the sink and the DLQ, and identical
+    counters — across NULL fail-predicate rows, unrouted rows,
+    drop_unrouted, a dest that needs path escaping, NULL and '' dests
+    that escape to one directory, a send transform that rewrites rows
+    and one that drops them, a column added by process, and a DLQ on
+    the sink's own base."""
+    import datetime as dt
+
+    from frizzle_spark.streaming import pipeline as P
+    from frizzle_spark.streaming.transforms import Transformer
+
+    ts = dt.datetime(2024, 1, 2, 3, 4, 5)
+    rows = [
+        ("a", b"x", ts, None, 1),  # unrouted
+        ("b", b"y\n", ts, "alt", 2),
+        ("c", b"z", None, "main", None),  # fail predicate is NULL
+        ("d", b"q", ts, "al/t:x=1", 3),  # escaped partition path
+        ("e", b"e", ts, "", 4),  # '' escapes to NULL's directory
+        ("g", b"g", ts, "main", 5),  # dropped by a send transform
+        ("f1", b"w", ts, None, 9),
+        ("f2", b"v\n", ts, "alt", 9),
+    ]
+    drop_g = Transformer(send=lambda df: df.where(F.col("id") != "g"))
+    batch = _file_batch(spark, tmp_path, rows, PRIO_SCHEMA)
+
+    def run(tier):
+        if tier == "spark":
+            monkeypatch.setattr(P, "ARROW_TIER_MAX_RESULT_FRACTION", 0)
+        sink = P.ParquetSink(str(tmp_path / tier / "sink"))
+        dlq = sink if shared_dlq else P.ParquetSink(str(tmp_path / tier / "dlq"))
+        stats = M.DictStats()
+        pipe = Pipeline(
+            spark,
+            source=None,
+            sink=sink,
+            default_dest=default_dest,
+            fail_sink=(dlq, "dead"),
+            transformers=[sep_transformer(b"\n"), drop_g],
+            process=lambda df: df.withColumn("n", F.length("data")),
+            fail_predicate=F.col("prio") == 9,
+            stats=stats,
+            drop_unrouted=drop_unrouted,
+        )
+        pipe._run_batch(batch, 3)
+        monkeypatch.undo()
+        out = []
+        for s in {sink.base_path: sink, dlq.base_path: dlq}.values():
+            cur = s.read_current(spark)
+            out.append((cur.schema, sorted(cur.collect())))
+        files = {f for _, _, fs in os.walk(sink.base_path) for f in fs}
+        return out, dict(stats.counts), files
+
+    got, got_stats, files = run("arrow")
+    want, want_stats, spark_files = run("spark")
+    assert "part-3.parquet" in files and "part-3.parquet" not in spark_files
+    assert got == want
+    assert got_stats == want_stats
+    # counters are taken before the send transforms, in both tiers
+    assert got_stats[M.RCV] == 8 and got_stats[M.FAIL] == 2
+    assert got_stats[M.SEND] == (5 if drop_unrouted else 6)
+
+
+def test_arrow_tier_falls_back_when_collect_exceeds_max_result(
+    spark, tmp_path, monkeypatch
+):
+    """A batch under the input cap whose collect still overflows
+    spark.driver.maxResultSize (here: highly compressible rows) takes
+    the Spark tier, and the Arrow tier has written nothing before it."""
+    from frizzle_spark.streaming import pipeline as P
+
+    base = str(tmp_path / "sink")
+    stats = M.DictStats()
+    pipe = Pipeline(
+        spark, source=None, sink=P.ParquetSink(base), default_dest="main", stats=stats
+    )
+    rows = [(str(i), b"x" * 100, None, None) for i in range(2000)]
+    batch = _file_batch(spark, tmp_path, rows)
+    monkeypatch.setattr(P, "ARROW_TIER_MAX_RESULT_FRACTION", 1.0)
+    conf = spark.sparkContext._jsc.sc().conf()
+    old = conf.get("spark.driver.maxResultSize", "1g")
+    conf.set("spark.driver.maxResultSize", "64k")
+    try:
+        pipe._run_batch(batch, 2)
+    finally:
+        conf.set("spark.driver.maxResultSize", old)
+    assert "part-2.parquet" not in os.listdir(f"{base}/dest=main/_batch=2")
+    assert spark.read.parquet(base).count() == 2000 and stats.counts[M.RCV] == 2000
+
+
+def test_arrow_tier_staged_file_invisible_and_cleaned(spark, tmp_path):
+    """A file staged by an attempt that died before publishing is
+    skipped by every reader, and the next write of that batch removes
+    it."""
+    from frizzle_spark.streaming.pipeline import ParquetSink
+
+    base = str(tmp_path / "sink")
+    pipe = Pipeline(spark, source=None, sink=ParquetSink(base), default_dest="main")
+    batch = _file_batch(spark, tmp_path, [("a", b"x", None, None)])
+    pipe._run_batch(batch, 4)
+    part = f"{base}/dest=main/_batch=4"
+    staged = f"{part}/.part-4.parquet.dead.staging"
+    shutil.copy(f"{part}/part-4.parquet", staged)
+    assert spark.read.parquet(base).count() == 1
+    pipe._run_batch(batch, 4)
+    assert os.listdir(part) == ["part-4.parquet"]
+    assert spark.read.parquet(base).count() == 1
+
+
+def test_arrow_tier_compaction_preserves_contents(spark, tmp_path):
+    """compact() folds Arrow-tier batch files like Spark-tier ones:
+    read_current rows and schema are unchanged."""
+    base, sink = _batch_sink(spark, tmp_path, arrow=True)
+    assert os.listdir(f"{base}/dest=main/_batch=0") == ["part-0.parquet"]
+    before = sink.read_current(spark)
+    rows_before = sorted(before.drop("_batch").collect())
+    sink.compact(spark)
+    after = sink.read_current(spark)
+    assert after.schema == before.schema
+    assert sorted(after.drop("_batch").collect()) == rows_before
+    assert {r["_batch"] for r in after.select("_batch").distinct().collect()} == {-1}
+
+
+def test_arrow_tier_one_job_per_batch(spark, tmp_path):
+    """The Arrow tier's whole batch (counters, sink and DLQ) is one
+    Spark job: the Arrow collect."""
+    from frizzle_spark.streaming.pipeline import ParquetSink
+
+    sc = spark.sparkContext
+    stats = M.DictStats()
+    pipe = Pipeline(
+        spark,
+        source=None,
+        sink=ParquetSink(str(tmp_path / "sink")),
+        default_dest="out",
+        fail_sink=(ParquetSink(str(tmp_path / "dlq")), "dead"),
+        fail_predicate=F.col("id") == "fail",
+        stats=stats,
+    )
+    batch = _file_batch(
+        spark, tmp_path, [("a", b"x", None, "out"), ("fail", b"z", None, "out")]
+    )
+    sc.setJobGroup("probe-arrow-jobs", "job-count gate")
+    try:
+        pipe._run_batch(batch, 0)
+    finally:
+        sc.setJobGroup(None, None)
+    jobs = sc.statusTracker().getJobIdsForGroup("probe-arrow-jobs")
+    assert len(jobs) == 1, f"expected one Arrow collect, got {len(jobs)}"
+    assert stats.counts[M.RCV] == 2 and stats.counts[M.FAILSEND] == 1
 
 
 def test_query_error_increments_error_counter(spark, corpus_dir):
