@@ -88,7 +88,10 @@ Scale shape (100 TB): per-batch cost is O(batch) normalize/assign
 GEMMs + the pruned probe + O(batch²) within-batch scoring — quadratic
 only in the trigger-bounded micro-batch, never in the corpus.  Vectors
 never shuffle on the local tier (they move driver⇄storage once each
-way); the index grows only by survivors; state lives entirely in
+way, as Arrow buffers: the collected batch, the corpus and DLQ writes
+and the list and centroid files convert to and from numpy matrices
+without a Python float per element); the index grows only by
+survivors; state lives entirely in
 storage (index + meta), not in stream state stores.  Small-file
 accumulation from per-batch appends is the disease
 ``compact_ann_index`` (operators/ann_index.py) already cures — the
@@ -159,25 +162,65 @@ def _lists_bytes(index_base: str) -> int:
     return sum(size for _, size in _lists_manifest(index_base))
 
 
-def _read_lists_local(index_base: str) -> tuple[np.ndarray, np.ndarray]:
-    """(ids, unit matrix) of the WHOLE index, read driver-side — the
-    young-index tier only (byte-gated by the caller)."""
+def _arrow_matrix(col) -> np.ndarray:
+    """float64 [n, d] matrix of the n non-empty rows of an Arrow list
+    column, from one flatten of its value buffer.  NULL and empty rows
+    are skipped and a NULL element reads as NaN, as ``np.asarray`` reads
+    None; ragged rows raise ValueError, as in ``np.asarray``."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    if isinstance(col, pa.ChunkedArray):
+        col = col.combine_chunks()
+    lens = pc.list_value_length(col).to_numpy(zero_copy_only=False)
+    lens = lens[lens > 0]  # a NULL row's length reads NaN
+    if not len(lens):
+        return np.empty((0, 0))
+    if lens.min() != lens.max():
+        raise ValueError(f"ragged list rows: {lens.min():.0f}..{lens.max():.0f}")
+    flat = pc.list_flatten(col).to_numpy(zero_copy_only=False)
+    return flat.reshape(len(lens), -1).astype(np.float64, copy=False)
+
+
+def _list_column(mat: np.ndarray):
+    """The rows of ``mat`` as an Arrow list<double> column over its
+    buffer: the same column as ``pa.array`` of the rows as float lists."""
+    import pyarrow as pa
+
+    n, d = mat.shape
+    return pa.ListArray.from_arrays(
+        pa.array(np.arange(0, n * d + 1, d, dtype=np.int32)),
+        pa.array(np.ascontiguousarray(mat, dtype=np.float64).ravel()),
+    )
+
+
+def _read_list_files(paths) -> tuple[np.ndarray, np.ndarray]:
+    """(ids, unit matrix) of the (vec_id, u) list files ``paths``, in
+    order, read driver-side via Arrow."""
     import pyarrow.parquet as pq
 
     ids, mats = [], []
-    lists_dir = os.path.join(index_base, "lists")
-    for root, _dirs, files in sorted(os.walk(lists_dir)):
-        for f in sorted(files):
-            if not f.endswith(".parquet"):
-                continue
-            tb = pq.read_table(os.path.join(root, f), columns=["vec_id", "u"])
-            if tb.num_rows == 0:
-                continue
-            ids.append(tb["vec_id"].to_numpy())
-            mats.append(np.asarray(tb["u"].to_pylist(), dtype=np.float64))
+    for p in paths:
+        tb = pq.read_table(p, columns=["vec_id", "u"])
+        if tb.num_rows == 0:
+            continue
+        ids.append(tb["vec_id"].to_numpy())
+        mats.append(_arrow_matrix(tb["u"]))
     if not ids:
         return np.empty(0, dtype=np.int64), np.empty((0, 0))
     return np.concatenate(ids).astype(np.int64), np.vstack(mats)
+
+
+def _read_lists_local(index_base: str) -> tuple[np.ndarray, np.ndarray]:
+    """(ids, unit matrix) of the WHOLE index, read driver-side — the
+    young-index tier only (byte-gated by the caller)."""
+    lists_dir = os.path.join(index_base, "lists")
+    return _read_list_files(
+        os.path.join(root, f)
+        for root, _dirs, files in sorted(os.walk(lists_dir))
+        for f in sorted(files)
+        if f.endswith(".parquet")
+    )
 
 
 def _lists_manifest(index_base: str) -> tuple:
@@ -281,31 +324,12 @@ def _cluster_manifest(index_base: str, c: int) -> tuple:
 
 
 def _read_cluster_local(index_base: str, c: int) -> tuple[np.ndarray, np.ndarray]:
-    """(ids, unit matrix) of ONE cluster's inverted list, read
-    driver-side via Arrow (flatten, not to_pylist — the matrix arrives
-    as one contiguous buffer)."""
-    import pyarrow.parquet as pq
-
+    """(ids, unit matrix) of ONE cluster's inverted list."""
     d = os.path.join(index_base, "lists", f"cluster={c}")
-    ids, mats = [], []
-    if os.path.isdir(d):
-        for f in sorted(os.listdir(d)):
-            if not f.endswith(".parquet"):
-                continue
-            tb = pq.read_table(os.path.join(d, f), columns=["vec_id", "u"])
-            if tb.num_rows == 0:
-                continue
-            ids.append(tb["vec_id"].to_numpy())
-            u_col = tb["u"].combine_chunks()
-            mats.append(
-                u_col.flatten()
-                .to_numpy(zero_copy_only=False)
-                .reshape(tb.num_rows, -1)
-                .astype(np.float64, copy=False)
-            )
-    if not ids:
-        return np.empty(0, dtype=np.int64), np.empty((0, 0))
-    return np.concatenate(ids).astype(np.int64), np.vstack(mats)
+    files = sorted(os.listdir(d)) if os.path.isdir(d) else []
+    return _read_list_files(
+        os.path.join(d, f) for f in files if f.endswith(".parquet")
+    )
 
 
 def _cluster_blocks(index_base: str, wanted: list[int]) -> dict | None:
@@ -401,17 +425,16 @@ def _blocked_max_hits(
     iu: np.ndarray,
     iids: np.ndarray,
     threshold: float,
-    exclude: set[int],
+    exclude: np.ndarray,
 ) -> dict[int, tuple[int, float]]:
     """row index of ``qu`` → (min old vec_id at/above threshold, its
     cosine), skipping index rows whose vec_id is in ``exclude`` (the
-    redelivery guard).  Blocked GEMM, O(BLOCK²) peak memory."""
+    redelivery guard, an int64 id array).  Blocked GEMM, O(BLOCK²) peak
+    memory."""
     hits: dict[int, tuple[int, float]] = {}
     if not len(qu) or not len(iu):
         return hits
-    keep = np.fromiter(
-        (int(i) not in exclude for i in iids), dtype=bool, count=len(iids)
-    )
+    keep = ~np.isin(iids, exclude)
     iu, iids = iu[keep], iids[keep]
     if not len(iu):
         return hits
@@ -475,7 +498,7 @@ def _guard_lists_within_k(index_base: str, k: int) -> None:
 
 
 def _probe_index_local(
-    index_base: str, u: np.ndarray, threshold: float, exclude: set[int]
+    index_base: str, u: np.ndarray, threshold: float, exclude: np.ndarray
 ) -> dict[int, tuple[int, float]]:
     ids, iu = _young_index(index_base)
     return _blocked_max_hits(u, iu, ids, threshold, exclude)
@@ -502,7 +525,7 @@ def _probe_index_pruned_cached(
     u: np.ndarray,
     threshold: float,
     nprobe,
-    exclude: set[int],
+    exclude: np.ndarray,
 ) -> dict[int, tuple[int, float]] | None:
     """Driver-side twin of ``_probe_index_pruned_broadcast`` over the
     per-cluster block cache: same centroid routing, same exclude
@@ -545,7 +568,7 @@ def _probe_index_pruned_broadcast(
     u: np.ndarray,
     threshold: float,
     nprobe,
-    exclude: set[int],
+    exclude: np.ndarray,
 ) -> dict[int, tuple[int, float]]:
     """The scale probe for cap-bounded batches: the INDEX SIDE NEVER
     SHUFFLES.  The batch matrix (≤ cap×dim ≈ 8 MB) broadcasts once with
@@ -570,7 +593,7 @@ def _probe_index_pruned_broadcast(
     # batch's own, ≤ cap) are masked off the index side BEFORE the
     # GEMM, so a same-batch sibling can never shadow a true earlier hit
     bc = spark.sparkContext.broadcast(
-        (u, vec_ids, by_cluster, np.asarray(sorted(exclude), dtype=np.int64))
+        (u, vec_ids, by_cluster, np.unique(exclude))
     )
 
     def score(batches):  # pragma: no cover - executed on executors
@@ -737,10 +760,7 @@ def _bootstrap_index(
         pa.table(
             {
                 "cluster": pa.array(range(len(cent)), pa.int32()),
-                "centroid": pa.array(
-                    [list(map(float, c)) for c in cent],
-                    pa.list_(pa.float64()),
-                ),
+                "centroid": _list_column(cent),
             }
         ),
         os.path.join(index_base, "centroids", "part-emb-0.parquet"),
@@ -757,6 +777,7 @@ def _bootstrap_index(
 
 
 def _load_centroids(index_base: str) -> np.ndarray:
+    import pyarrow as pa
     import pyarrow.parquet as pq
 
     cdir = os.path.join(index_base, "centroids")
@@ -765,11 +786,9 @@ def _load_centroids(index_base: str) -> np.ndarray:
         for f in sorted(os.listdir(cdir))
         if f.endswith(".parquet")
     ]
-    import pyarrow as pa
-
     tb = pa.concat_tables(tabs)
     order = np.argsort(tb["cluster"].to_numpy())
-    return np.asarray(tb["centroid"].to_pylist(), dtype=np.float64)[order]
+    return _arrow_matrix(tb["centroid"])[order]
 
 
 def _append_index_local(
@@ -800,13 +819,8 @@ def _append_index_local(
         pq.write_table(
             pa.table(
                 {
-                    "vec_id": pa.array(
-                        kept_ids[mask].tolist(), pa.int64()
-                    ),
-                    "u": pa.array(
-                        [list(map(float, r)) for r in kept_u[mask]],
-                        pa.list_(pa.float64()),
-                    ),
+                    "vec_id": pa.array(kept_ids[mask], pa.int64()),
+                    "u": _list_column(kept_u[mask]),
                 }
             ),
             os.path.join(target, _own_index_file(batch_id)),
@@ -880,20 +894,14 @@ def embedding_ingest_batch(
             threshold, eval_vecs, eval_threshold, nprobe, meta,
         )
 
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
     all_ids = tb["vec_id"].to_numpy().astype(np.int64, copy=False)
-    all_vecs = tb["embedding"].to_pylist()
-    valid = np.fromiter(
-        (v is not None and len(v) > 0 for v in all_vecs),
-        dtype=bool,
-        count=len(all_vecs),
-    )
+    emb = tb["embedding"].combine_chunks()
+    valid = pc.fill_null(pc.list_value_length(emb), 0).to_numpy() > 0
     ids = all_ids[valid]
-    vecs = [all_vecs[i] for i in np.nonzero(valid)[0]]
-    u = (
-        np.asarray(vecs, dtype=np.float64)
-        if len(vecs)
-        else np.empty((0, 0))
-    )
+    u = _arrow_matrix(emb)
     if len(u):
         nrm = np.linalg.norm(u, axis=1, keepdims=True)
         nrm[nrm == 0] = 1.0
@@ -906,52 +914,35 @@ def embedding_ingest_batch(
         emax = esim.max(axis=1) if esim.shape[1] else np.zeros(len(u))
         for row in np.nonzero(emax >= eval_threshold)[0]:
             contaminated[int(ids[row])] = float(emax[row])
+    e_rows = np.nonzero(
+        ~np.isin(ids, np.fromiter(contaminated, np.int64, len(contaminated)))
+    )[0]
 
     # -- cross probe: batch vs ACCEPTED (tiered; redelivery-guarded) ----
     idx_dup: dict[int, tuple[int, float]] = {}  # vec_id → (old_id, cos)
-    if meta.get("index_ready") and len(u):
-        elig_rows = np.asarray(
-            [i for i in range(len(ids)) if int(ids[i]) not in contaminated],
-            dtype=np.int64,
-        )
-        batch_set = {int(i) for i in ids}
-        if len(elig_rows):
-            if _lists_bytes(index_base) <= EMB_PROBE_LOCAL_MAX_BYTES:
-                hits = _probe_index_local(
-                    index_base, u[elig_rows], threshold, batch_set
+    if meta.get("index_ready") and len(e_rows):
+        if _lists_bytes(index_base) <= EMB_PROBE_LOCAL_MAX_BYTES:
+            hits = _probe_index_local(index_base, u[e_rows], threshold, ids)
+        else:
+            # past the young cap its cached copy of the whole index
+            # is never probed again: free it instead of extending it
+            _YOUNG_CACHE.pop(index_base, None)
+            np_eff = nprobe if nprobe is not None else _index_nprobe(index_base)
+            # cluster-block cache first (zero Spark jobs, identical
+            # result — r13, VERDICT r12 #9); the broadcast-tier
+            # Spark job only when the probed working set outgrows
+            # the driver cache budget
+            hits = _probe_index_pruned_cached(
+                index_base, u[e_rows], threshold, np_eff, ids
+            )
+            if hits is None:
+                hits = _probe_index_pruned_broadcast(
+                    spark, index_base, ids[e_rows], u[e_rows], threshold, np_eff, ids
                 )
-            else:
-                # past the young cap its cached copy of the whole index
-                # is never probed again: free it instead of extending it
-                _YOUNG_CACHE.pop(index_base, None)
-                np_eff = (
-                    nprobe if nprobe is not None else _index_nprobe(index_base)
-                )
-                # cluster-block cache first (zero Spark jobs, identical
-                # result — r13, VERDICT r12 #9); the broadcast-tier
-                # Spark job only when the probed working set outgrows
-                # the driver cache budget
-                hits = _probe_index_pruned_cached(
-                    index_base, u[elig_rows], threshold, np_eff, batch_set
-                )
-                if hits is None:
-                    hits = _probe_index_pruned_broadcast(
-                        spark,
-                        index_base,
-                        ids[elig_rows],
-                        u[elig_rows],
-                        threshold,
-                        np_eff,
-                        batch_set,
-                    )
-            for q, (old, c) in hits.items():
-                idx_dup[int(ids[elig_rows[q]])] = (old, c)
+        for q, (old, c) in hits.items():
+            idx_dup[int(ids[e_rows[q]])] = (old, c)
 
     # -- within-batch collapse (among non-contaminated) -----------------
-    elig_mask = np.fromiter(
-        (int(i) not in contaminated for i in ids), dtype=bool, count=len(ids)
-    )
-    e_rows = np.nonzero(elig_mask)[0]
     pairs = _within_batch_pairs(u[e_rows], threshold) if len(e_rows) else []
     parent: dict[int, int] = {}
 
@@ -984,41 +975,44 @@ def embedding_ingest_batch(
         if d < keep_of.get(c, 1 << 62):
             keep_of[c] = d
 
-    rows = []
-    n_kept = 0
-    kept_rows = []
+    kept_rows = []  # rows of the collected batch
+    dlq = []
     for row, d in enumerate(map(int, all_ids)):
         if not valid[row]:
-            rows.append((d, "dlq", "invalid", None, None))
+            dlq.append((d, "invalid", None, None))
             continue
         if d in contaminated:
-            rows.append((d, "dlq", "contaminated", None, contaminated[d]))
+            dlq.append((d, "contaminated", None, contaminated[d]))
             continue
         c = cluster.get(d, d)
         k = keep_of.get(c)
         if k == d:
-            rows.append((d, "corpus", None, None, None))
-            kept_rows.append(d)
-            n_kept += 1
+            kept_rows.append(row)
         elif d in idx_dup:
             old, cs = idx_dup[d]
-            rows.append((d, "dlq", "dup_index", old, round(cs, 6)))
+            dlq.append((d, "dup_index", old, round(cs, 6)))
         else:
             # k is not None: a component with no eligible member has
             # every member contaminated or an index dup, handled above
-            rows.append(
-                (d, "dlq", "dup_batch", k, round(evidence.get(d, 1.0), 6))
-            )
+            dlq.append((d, "dup_batch", k, round(evidence.get(d, 1.0), 6)))
+    kept_rows = np.asarray(kept_rows, dtype=np.int64)
+    n_kept = len(kept_rows)
 
     # -- route (idempotent per-batch partition overwrite) ---------------
-    import pyarrow as pa
+    from frizzle_spark.streaming.pipeline import (
+        arrow_filesystem,
+        write_batch_rows,
+        write_batch_table,
+    )
 
-    from frizzle_spark.streaming.pipeline import arrow_filesystem, write_batch_rows
-
-    vec_of = dict(zip(map(int, all_ids), all_vecs))
-    kept = [(r[0], vec_of[r[0]]) for r in rows if r[1] == "corpus"]
-    dlq = [(r[0], *r[2:]) for r in rows if r[1] == "dlq"]
-    corpus_cols = (("vec_id", "int64"), ("embedding", pa.list_(pa.float32())))
+    # the corpus is the collected batch's own columns, cast to the sink
+    # schema: its float32 values never become Python floats
+    corpus = pa.table(
+        {
+            "vec_id": tb["vec_id"].take(kept_rows).cast(pa.int64()),
+            "embedding": emb.take(kept_rows).cast(pa.list_(pa.float32())),
+        }
+    )
     dlq_cols = (
         ("vec_id", "int64"),
         ("reason", "string"),
@@ -1026,14 +1020,11 @@ def embedding_ingest_batch(
         ("cos_sim", "float64"),
     )
     out = arrow_filesystem(spark, out_base)
-    write_batch_rows(out, "corpus", batch_id, kept, corpus_cols)
+    write_batch_table(out, "corpus", batch_id, corpus)
     write_batch_rows(out, "dlq", batch_id, dlq, dlq_cols)
 
     # -- index the survivors (redelivery-guarded window, module doc) ----
-    kept_set = set(kept_rows)
-    kmask = np.fromiter(
-        (int(i) in kept_set for i in ids), dtype=bool, count=len(ids)
-    )
+    kmask = np.isin(ids, all_ids[kept_rows])
     kept_ids, kept_u = ids[kmask], u[kmask] if len(u) else u
     if not meta.get("index_ready"):
         if len(kept_ids):

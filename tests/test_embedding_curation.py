@@ -21,6 +21,7 @@ from frizzle_spark.streaming import embedding_curation as EC
 # over a few thousand pairs — decisions are planted-only by geometry
 DIM = 32
 RNG = np.random.RandomState(1234)
+NO_IDS = np.empty(0, dtype=np.int64)  # a probe's exclude set, empty
 
 
 def _mk_vecs(n: int, seed: int = 7) -> np.ndarray:
@@ -37,12 +38,16 @@ def _df(spark, ids, vecs):
             {
                 "vec_id": np.asarray(ids, dtype=np.int64),
                 "embedding": [
-                    None if v is None else [float(x) for x in v] for v in vecs
+                    None if v is None else [_float_or_none(x) for x in v] for v in vecs
                 ],
             }
         ),
         "vec_id long, embedding array<float>",
     )
+
+
+def _float_or_none(x):
+    return None if x is None else float(x)
 
 
 def _noisy(v: np.ndarray, eps: float = 1e-3) -> np.ndarray:
@@ -186,11 +191,16 @@ def test_replay_noop_and_redelivery_bit_identity(spark, bases):
     assert res["skipped"]
 
 
-def test_decon_gate_and_invalid(spark, bases):
+def test_decon_gate_and_invalid(spark, bases, tmp_path):
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
     base = _mk_vecs(10)
     ev = _mk_vecs(2, seed=5)
-    ids = list(range(10)) + [500, 501]
-    vecs = list(base) + [_noisy(ev[0]), None]
+    # 501 NULL, 502 empty, 503 a vector with a NULL element
+    holey = [None] + list(base[9][1:])
+    ids = list(range(9)) + [500, 501, 502, 503]
+    vecs = list(base[:9]) + [_noisy(ev[0]), None, [], holey]
     _ingest(spark, bases, [(ids, vecs)], eval_vecs=ev)
     rows = dict(
         (vid, (dest, reason))
@@ -198,15 +208,91 @@ def test_decon_gate_and_invalid(spark, bases):
     )
     assert rows[500] == ("dlq", "contaminated")
     assert rows[501] == ("dlq", "invalid")
-    # contaminated vectors are never indexed
-    import pyarrow.parquet as pq
-
+    assert rows[502] == ("dlq", "invalid")
+    # a NULL element reads as NaN (np.asarray's None): the NaN row
+    # matches nothing, so it survives, with its NULL kept in the corpus
+    assert rows[503] == ("corpus", None)
+    col = pa.array([[1.0, None], None, [], [3.0, 4.0]], pa.list_(pa.float32()))
+    np.testing.assert_array_equal(
+        EC._arrow_matrix(col), np.asarray([[1.0, None], [3.0, 4.0]], dtype=float)
+    )
+    corpus = pq.read_table(os.path.join(bases[1], "corpus"))
+    emb = dict(zip(corpus["vec_id"].to_pylist(), corpus["embedding"].to_pylist()))
+    assert emb[503][0] is None and emb[503][1:] == [
+        float(np.float32(x)) for x in holey[1:]
+    ]
+    # contaminated and invalid vectors are never indexed
     for root, _d, files in os.walk(os.path.join(bases[0], "lists")):
         for f in files:
             if f.endswith(".parquet"):
                 tb = pq.read_table(os.path.join(root, f))
-                assert 500 not in tb["vec_id"].to_pylist()
-                assert 501 not in tb["vec_id"].to_pylist()
+                assert not {500, 501, 502} & set(tb["vec_id"].to_pylist())
+    # a ragged batch (two lengths, 4 rows of 12 values in all) raises
+    # rather than reshape into 4 rows of 3
+    ragged = [base[0][:4], base[1][:2], base[2][:4], base[3][:2]]
+    rb = (str(tmp_path / "ri"), str(tmp_path / "ro"))
+    with pytest.raises(ValueError):
+        _ingest(spark, rb, [(range(4), ragged)])
+    assert not os.path.exists(os.path.join(rb[1], "corpus"))
+
+
+def test_sink_and_list_files_keep_their_bytes(spark, bases, tmp_path):
+    # the columnar batch path writes the files the Python-list build
+    # wrote: the corpus keeps the input float32 bits under the same
+    # schema, and every list and centroid file is byte-identical to a
+    # pq.write_table of its table built from Python floats (the young
+    # cap is gated on these bytes)
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    index, out = bases
+    base = _mk_vecs(70)
+    _ingest(spark, bases, [(range(40), base[:40]), (range(40, 70), base[40:])])
+    f32 = base[40:].astype(np.float32)
+    corpus = pq.read_table(os.path.join(out, "corpus", "batch_id=1"))
+    assert corpus.schema == pa.schema(
+        [("vec_id", pa.int64()), ("embedding", pa.list_(pa.float32()))]
+    )
+    assert corpus["vec_id"].to_pylist() == list(range(40, 70))
+    got = np.asarray(corpus["embedding"].to_pylist(), dtype=np.float32)
+    assert np.array_equal(got.view(np.uint32), f32.view(np.uint32))
+
+    def file_bytes(p: str) -> bytes:
+        with open(p, "rb") as fh:
+            return fh.read()
+
+    def old_bytes(cols: dict) -> bytes:
+        p = str(tmp_path / "old.parquet")
+        pq.write_table(pa.table(cols), p)
+        return file_bytes(p)
+
+    u = f32.astype(np.float64)
+    u = u / np.linalg.norm(u, axis=1, keepdims=True)
+    cent = EC._load_centroids(index)
+    assign = (u @ cent.T).argmax(axis=1)
+    for c in np.unique(assign):
+        rows = np.nonzero(assign == c)[0]
+        want = old_bytes(
+            {
+                "vec_id": pa.array((40 + rows).tolist(), pa.int64()),
+                "u": pa.array(
+                    [list(map(float, r)) for r in u[rows]],
+                    pa.list_(pa.float64()),
+                ),
+            }
+        )
+        f = os.path.join(index, "lists", f"cluster={c}", EC._own_index_file(1))
+        assert file_bytes(f) == want
+    cf = os.path.join(index, "centroids", "part-emb-0.parquet")
+    want = old_bytes(
+        {
+            "cluster": pa.array(range(len(cent)), pa.int32()),
+            "centroid": pa.array(
+                [list(map(float, r)) for r in cent], pa.list_(pa.float64())
+            ),
+        }
+    )
+    assert file_bytes(cf) == want
 
 
 def test_forced_distributed_tier_identity(spark, bases, tmp_path, monkeypatch):
@@ -274,19 +360,19 @@ def test_cluster_cached_probe_identity_and_fallback(
     )
     for npb in (2, "all"):
         EC._CLUSTER_CACHE.clear()
-        cold = EC._probe_index_pruned_cached(index, probes, 0.9, npb, set())
-        warm = EC._probe_index_pruned_cached(index, probes, 0.9, npb, set())
+        cold = EC._probe_index_pruned_cached(index, probes, 0.9, npb, NO_IDS)
+        warm = EC._probe_index_pruned_cached(index, probes, 0.9, npb, NO_IDS)
         bc = EC._probe_index_pruned_broadcast(
-            spark, index, probe_ids, probes, 0.9, npb, set()
+            spark, index, probe_ids, probes, 0.9, npb, NO_IDS
         )
         assert cold is not None and cold  # planted dups actually hit
         _hits_equal(cold, warm)
         _hits_equal(cold, bc)
     # exclude masking identical across tiers
     EC._CLUSTER_CACHE.clear()
-    got = EC._probe_index_pruned_cached(index, probes, 0.9, 2, {5})
+    got = EC._probe_index_pruned_cached(index, probes, 0.9, 2, np.array([5]))
     bc = EC._probe_index_pruned_broadcast(
-        spark, index, probe_ids, probes, 0.9, 2, {5}
+        spark, index, probe_ids, probes, 0.9, 2, np.array([5])
     )
     assert got is not None
     _hits_equal(got, bc)
@@ -294,7 +380,7 @@ def test_cluster_cached_probe_identity_and_fallback(
     # budget 0: the pre-load gate refuses before reading anything
     monkeypatch.setattr(EC, "EMB_CLUSTER_CACHE_MAX_BYTES", 0)
     EC._CLUSTER_CACHE.clear()
-    assert EC._probe_index_pruned_cached(index, probes, 0.9, 2, set()) is None
+    assert EC._probe_index_pruned_cached(index, probes, 0.9, 2, NO_IDS) is None
     # ...and the ingest path still works end-to-end via the fallback
     ib2, ob2 = bases[0] + "_fb", bases[1] + "_fb"
     _ingest(
@@ -319,7 +405,7 @@ def test_cluster_cache_extend_matches_cold_reload(spark, bases, monkeypatch):
     EC._CLUSTER_CACHE.clear()
     # warm the cache over every cluster, then append batch 1 (extends)
     EC._probe_index_pruned_cached(
-        index, np.vstack([_noisy(base[i]) for i in range(6)]), 0.9, "all", set()
+        index, np.vstack([_noisy(base[i]) for i in range(6)]), 0.9, "all", NO_IDS
     )
     _ingest(
         spark,
@@ -327,9 +413,9 @@ def test_cluster_cache_extend_matches_cold_reload(spark, bases, monkeypatch):
         [(range(40), base[:40]), (range(40, 80), base[40:80])],
     )
     p2 = np.vstack([_noisy(base[40 + i]) for i in range(6)])
-    warm = EC._probe_index_pruned_cached(index, p2, 0.9, "all", set())
+    warm = EC._probe_index_pruned_cached(index, p2, 0.9, "all", NO_IDS)
     EC._CLUSTER_CACHE.clear()
-    cold = EC._probe_index_pruned_cached(index, p2, 0.9, "all", set())
+    cold = EC._probe_index_pruned_cached(index, p2, 0.9, "all", NO_IDS)
     assert warm is not None and len(warm) == 6
     _hits_equal(warm, cold)
 
