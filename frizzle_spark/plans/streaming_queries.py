@@ -905,11 +905,15 @@ def qz13_embedding_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     redelivery bit-identity, the pairwise survivor invariant (exact
     recompute) and forced-tier identity.
 
-    Scale shape: per-slice cost is O(slice) GEMMs + the pruned index
-    probe (young-index tier driver-side below 64 MiB, cogrouped
-    cluster-pruned scan above); within-batch scoring is quadratic only
-    in the trigger-bounded micro-batch; state lives in storage (index +
-    meta watermark), not in stream state stores."""
+    Scale shape: each slice is one micro-batch, collected whole onto
+    the driver in one Arrow collect and decided by one driver-local
+    body: O(slice) driver memory and normalize/assign GEMMs, the index
+    probe (the driver's cluster cache, every cluster below 64 MiB of
+    lists and the nprobe nearest above; a broadcast cluster-pruned scan
+    when the probed clusters outgrow the cache), and O(slice²)
+    within-batch scoring.  The slices are N/4 of the corpus, so both
+    grow with the scale factor; state lives in storage (index + meta
+    watermark), not in stream state stores."""
     import atexit
     import os
     import shutil

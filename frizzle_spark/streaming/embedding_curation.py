@@ -34,34 +34,23 @@ Semantics — greedy first-occurrence-wins, mirroring the MinHash bus:
 Probe tiers (the sub-linear story, same posture as the MinHash bus's
 rowgroup probe):
 
-* **young index** (lists ≤ ``EMB_PROBE_LOCAL_MAX_BYTES`` on disk): the
-  index matrix lives in the manifest-validated ``_YOUNG_CACHE`` (one
-  os.walk per batch for coherence; extended in place on append — the
-  uncached version re-opened every append file per batch and its wall
-  grew 1.3 → 9.5 s over 28 batches) and the probe is one blocked numpy
-  GEMM — zero Spark jobs, the warm-batch fast path;
-* **cached pruned probe** (r13, the steady-state tier past the young
-  cap): same ``nprobe`` centroid routing, but the probed clusters'
+* **cached cluster probe** (the driver tier): the probed clusters'
   (ids, matrix) blocks live in a per-cluster LRU driver cache
   (``_CLUSTER_CACHE``, byte budget ``EMB_CLUSTER_CACHE_MAX_BYTES``)
   coherence-checked by per-cluster manifest signature and extended in
-  place on append — zero Spark jobs per batch, identical hits to the
-  broadcast tier (pytest-gated).  A working set over the budget falls
-  back to:
-* **broadcast pruned probe** (the Spark scale tier, cap-bounded
-  batches): batch vectors route to their ``nprobe`` nearest coarse
-  clusters against the collectable centroid table, the lists scan
-  prunes to exactly the probed ``cluster=…`` partitions at
-  file-listing time, and a mapInPandas over the scan GEMMs each Arrow
-  batch against only the sub-batch probing its cluster (batch matrix
-  broadcast once, ≤ cap×dim ≈ 8 MB).  THE INDEX SIDE NEVER SHUFFLES —
-  zero exchanges before the ≤-batch-rows aggregation (a cogroup first
-  cut re-shuffled the index every micro-batch);
-* **cogrouped pruned probe** (``_probe_index_pruned``, over-cap
-  batches only): when the batch itself is too big to broadcast, both
-  sides shuffle by cluster and score in ``applyInPandas`` cogroups —
-  the bulk-load path, not the per-trigger path;
-* probing is approximate above the young tier exactly as IVF search
+  place on append — zero Spark jobs per batch.  While the lists are
+  young (≤ ``EMB_PROBE_LOCAL_MAX_BYTES`` on disk) it probes every
+  cluster, so the probe is exact; past that cap it probes each batch
+  vector's ``nprobe`` nearest coarse clusters.  A working set over the
+  budget falls back to:
+* **broadcast pruned probe** (the Spark scale tier): the same centroid
+  routing, but the lists scan prunes to exactly the probed
+  ``cluster=…`` partitions at file-listing time, and a mapInPandas
+  over the scan GEMMs each Arrow batch against only the sub-batch
+  probing its cluster (batch matrix broadcast once).  THE INDEX SIDE
+  NEVER SHUFFLES — zero exchanges before the ≤-batch-rows aggregation.
+  Its hits equal the cached tier's (pytest-gated);
+* probing is approximate above the young cap exactly as IVF search
   is: a true near-dup outside the probed clusters is missed.  That is
   the deliberate trade the MinHash estimator also makes; forcing
   ``nprobe="all"`` makes the probe EXACT and is how the identity gate
@@ -78,20 +67,25 @@ tmp+replace), per-batch partition directories written with overwrite,
 replay of a committed batch is a no-op.  The index append sits between
 the sink write and the meta commit; the crash window is benign because
 the redelivered batch's probe EXCLUDES its own vec_ids from the index
-side, and (local tier) the per-cluster append files are named by
+side, and the per-cluster append files are named by
 batch_id so a redelivered append overwrites itself instead of
 duplicating.  ``index_meta.json``'s ``n_vectors`` is synced from the
 COMMITTED ledger at commit time, so a crash between append and commit
 cannot double-count.
 
-Scale shape (100 TB): per-batch cost is O(batch) normalize/assign
-GEMMs + the pruned probe + O(batch²) within-batch scoring — quadratic
-only in the trigger-bounded micro-batch, never in the corpus.  Vectors
-never shuffle on the local tier (they move driver⇄storage once each
-way, as Arrow buffers: the collected batch, the corpus and DLQ writes
-and the list and centroid files convert to and from numpy matrices
-without a Python float per element); the index grows only by
-survivors; state lives entirely in
+Scale shape (100 TB): every micro-batch is decided by one driver-local
+body over one Arrow collect of the whole batch, so driver memory is
+O(batch) and within-batch scoring is O(batch²) GEMMs, never O(corpus).
+The batch size is bounded by the caller: a trigger-bounded stream batch
+(``maxFilesPerTrigger``) or a caller's slice (qz13_embedding_ingest's
+N/4 slices grow with the corpus); a collect over
+``spark.driver.maxResultSize`` fails the batch loudly before any write.
+Per-batch cost is that collect + O(batch) normalize/assign GEMMs + the
+pruned probe + the within-batch scoring.  Vectors never shuffle (they
+move driver⇄storage once each way, as Arrow buffers: the collected
+batch, the corpus and DLQ writes and the list and centroid files
+convert to and from numpy matrices without a Python float per
+element); the index grows only by survivors; state lives entirely in
 storage (index + meta), not in stream state stores.  Small-file
 accumulation from per-batch appends is the disease
 ``compact_ann_index`` (operators/ann_index.py) already cures — the
@@ -126,15 +120,14 @@ EMB_DUP_THRESHOLD = 0.9
 # Streaming twin of qz11_semantic_decontaminate's τ.
 EMB_DECON_THRESHOLD = 0.45
 
-# Local-decide cap: within-batch scoring is a blocked n×n driver GEMM —
-# at 16k×64d that is ~16 GFLOP (~1 s numpy), and the collected batch is
-# ~8 MB.  Micro-batches are trigger-bounded by definition (the same
-# argument as curation.LOCAL_DECIDE_MAX_DOCS); bigger batches take the
-# distributed twin, identity-gated.
+# Over-cap batch size: a batch above this many rows is reported as
+# over-cap (busbench's ``embedding.distributed_batches``).  Every batch,
+# over-cap or not, is decided by the same one-collect body.
 EMB_LOCAL_MAX_VECS = 1 << 14
-# Young-index fast path: below this on-disk size the whole lists tree
-# is read driver-side (pyarrow) and probed in one numpy GEMM — zero
-# Spark jobs.  64 MiB ≈ 120k vectors at 64d float64.
+# Young-index cap: below this on-disk size of the lists the cached probe
+# scans every cluster (exact, and the whole index fits the cluster
+# cache); above it, each vector's nprobe nearest.  64 MiB ≈ 120k vectors
+# at 64d float64.
 EMB_PROBE_LOCAL_MAX_BYTES = 64 << 20
 # Driver GEMM block edge: bounds any single scores matrix to
 # BLOCK² ≈ 16 MB regardless of batch/index size.
@@ -159,7 +152,14 @@ def _write_emb_meta(out_base: str, meta: dict) -> None:
 
 
 def _lists_bytes(index_base: str) -> int:
-    return sum(size for _, size in _lists_manifest(index_base))
+    """On-disk bytes of the lists tree — one directory walk, no file
+    reads (the young cap's gate)."""
+    total = 0
+    for root, _dirs, files in os.walk(os.path.join(index_base, "lists")):
+        for f in files:
+            if f.endswith(".parquet"):
+                total += os.stat(os.path.join(root, f)).st_size
+    return total
 
 
 def _arrow_matrix(col) -> np.ndarray:
@@ -211,79 +211,6 @@ def _read_list_files(paths) -> tuple[np.ndarray, np.ndarray]:
     return np.concatenate(ids).astype(np.int64), np.vstack(mats)
 
 
-def _read_lists_local(index_base: str) -> tuple[np.ndarray, np.ndarray]:
-    """(ids, unit matrix) of the WHOLE index, read driver-side — the
-    young-index tier only (byte-gated by the caller)."""
-    lists_dir = os.path.join(index_base, "lists")
-    return _read_list_files(
-        os.path.join(root, f)
-        for root, _dirs, files in sorted(os.walk(lists_dir))
-        for f in sorted(files)
-        if f.endswith(".parquet")
-    )
-
-
-def _lists_manifest(index_base: str) -> tuple:
-    """Sorted (path, size) signature of the lists tree — one directory
-    walk, no file reads.  The young-index cache's coherence check: any
-    append, compaction or external rewrite changes it."""
-    sig = []
-    for root, _dirs, files in os.walk(os.path.join(index_base, "lists")):
-        for f in files:
-            if f.endswith(".parquet"):
-                p = os.path.join(root, f)
-                sig.append((p, os.stat(p).st_size))
-    return tuple(sorted(sig))
-
-
-# index_base → {"sig": manifest, "ids": int64[], "mat": float64[n, d]}.
-# A long-running bus re-probes the SAME young index every micro-batch;
-# without this cache each batch re-opened every append file (measured:
-# per-batch wall grew 1.3 s → 9.5 s over 28 batches purely from
-# re-reading ~100 new files/batch).  Coherence is by manifest signature
-# (one os.walk per batch, ~ms), so restarts, compaction, redelivery
-# rewrites and out-of-process writers all invalidate correctly; the
-# appending batch extends it in place only if nothing but its own files
-# changed the manifest (``_young_cache_extend``).
-_YOUNG_CACHE: dict[str, dict] = {}
-
-
-def _young_index(index_base: str) -> tuple[np.ndarray, np.ndarray]:
-    sig = _lists_manifest(index_base)
-    c = _YOUNG_CACHE.get(index_base)
-    if c is not None and c["sig"] == sig:
-        return c["ids"], c["mat"]
-    ids, mat = _read_lists_local(index_base)
-    _YOUNG_CACHE[index_base] = {"sig": sig, "ids": ids, "mat": mat}
-    return ids, mat
-
-
-def _young_cache_extend(
-    index_base: str, new_ids: np.ndarray, new_u: np.ndarray, batch_id: int
-) -> None:
-    """Fold a just-appended survivor block into the cached matrix and
-    stamp the post-append manifest, so the next batch's probe needs no
-    re-read.  Only a block that was fresh before the append is
-    extended: its signature must equal the post-append manifest minus
-    this batch's own files.  Any other difference (an out-of-process
-    write, a redelivered batch's earlier files) drops the block, and the
-    next probe reloads it.  No-op when the cache is cold."""
-    c = _YOUNG_CACHE.get(index_base)
-    if c is None or not len(new_ids):
-        return
-    own = _own_index_file(batch_id)
-    sig = _lists_manifest(index_base)
-    if c["sig"] != tuple(e for e in sig if os.path.basename(e[0]) != own):
-        del _YOUNG_CACHE[index_base]
-        return
-    if len(c["ids"]):
-        c["ids"] = np.concatenate([c["ids"], new_ids.astype(np.int64)])
-        c["mat"] = np.vstack([c["mat"], new_u])
-    else:
-        c["ids"], c["mat"] = new_ids.astype(np.int64), new_u.copy()
-    c["sig"] = sig
-
-
 # Per-cluster probe-block cache (r13, VERDICT r12 #9): past the young
 # tier's byte cap the steady-state probe was a Spark job per micro-batch
 # (_probe_index_pruned_broadcast) — measured on the long bus
@@ -292,19 +219,18 @@ def _young_cache_extend(
 # partition scan every batch for index bytes that had NOT changed since
 # the previous batch.  This tier keeps the PROBED clusters' (ids, unit
 # matrix) blocks in driver memory under an LRU byte budget, coherence-
-# checked per cluster by the same (file, size) manifest signature the
-# young cache uses (appends, compaction, retrain and out-of-process
-# writers all invalidate correctly); the appending batch extends its
-# own touched blocks in place under the young cache's freshness rule.
-# Result identity with the broadcast tier is exact — same centroid
-# routing, same exclude masking, same min-old_id hit semantics — and
-# pytest-gated.  A batch whose probed
+# checked per cluster by a (file, size) manifest signature (appends,
+# compaction, retrain and out-of-process writers all invalidate
+# correctly); the appending batch extends its own touched blocks in
+# place when nothing else changed them (``_cluster_cache_extend``).
+# While the index is young every cluster is probed, so the cache holds
+# the whole index.  Result identity with the broadcast tier is exact —
+# same centroid routing, same exclude masking, same min-old_id hit
+# semantics — and pytest-gated.  A batch whose probed
 # working set exceeds the budget falls back to the broadcast tier for
 # that batch, so the 100 TB posture is unchanged: the index side never
 # shuffles, and the driver holds at most the budget.
-EMB_CLUSTER_CACHE_MAX_BYTES = int(
-    os.environ.get("FRIZZLE_EMB_CLUSTER_CACHE_BYTES", str(256 << 20))
-)
+EMB_CLUSTER_CACHE_MAX_BYTES = 256 << 20
 # index_base → OrderedDict[cluster → {"sig", "ids", "mat", "bytes"}]
 _CLUSTER_CACHE: dict[str, dict] = {}
 
@@ -393,10 +319,13 @@ def _cluster_cache_extend(
     batch_id: int,
 ) -> None:
     """Fold a just-appended survivor block into the touched clusters'
-    cached blocks, under the young cache's rule: a block is extended
-    (and stamped with its post-append manifest) only when its signature
-    equals that manifest minus this batch's own file; otherwise it is
-    dropped.  No-op for clusters not currently cached."""
+    cached blocks, so the next batch's probe needs no re-read.  A block
+    is extended (and stamped with its post-append manifest) only when it
+    was fresh before the append: its signature must equal that manifest
+    minus this batch's own file.  Any other difference (an
+    out-of-process write, a redelivered batch's earlier file) drops the
+    block, and the next probe reloads it.  No-op for clusters not
+    currently cached."""
     cache = _CLUSTER_CACHE.get(index_base)
     if not cache or assign is None or not len(kept_ids):
         return
@@ -443,7 +372,10 @@ def _blocked_max_hits(
         for is_ in range(0, len(iu), _GEMM_BLOCK):
             ib = iu[is_ : is_ + _GEMM_BLOCK]
             sims = qb @ ib.T
-            qi, ii = np.nonzero(sims >= threshold)
+            hit = sims >= threshold
+            if not hit.any():  # one pass; nonzero costs ~8× more
+                continue
+            qi, ii = np.nonzero(hit)
             for q, i in zip(qi, ii):
                 old = int(iids[is_ + i])
                 c = float(sims[q, i])
@@ -464,9 +396,13 @@ def _within_batch_pairs(
         for bs in range(as_, len(u), _GEMM_BLOCK):
             bb = u[bs : bs + _GEMM_BLOCK]
             sims = ab @ bb.T
-            if as_ == bs:
-                sims = np.triu(sims, k=1)
-            i, j = np.nonzero(sims >= threshold)
+            hit = sims >= threshold
+            if not hit.any():  # one pass; nonzero costs ~8× more
+                continue
+            i, j = np.nonzero(hit)
+            if as_ == bs:  # the diagonal block: its upper triangle only
+                upper = i < j
+                i, j = i[upper], j[upper]
             out.extend(
                 (as_ + int(a), bs + int(b), float(sims[a, b]))
                 for a, b in zip(i, j)
@@ -495,13 +431,6 @@ def _guard_lists_within_k(index_base: str, k: int) -> None:
                     f"the centroid table (k={k}) — an interrupted "
                     "compact_ann_index(retrain=True); re-run it to heal"
                 )
-
-
-def _probe_index_local(
-    index_base: str, u: np.ndarray, threshold: float, exclude: np.ndarray
-) -> dict[int, tuple[int, float]]:
-    ids, iu = _young_index(index_base)
-    return _blocked_max_hits(u, iu, ids, threshold, exclude)
 
 
 def _routing_by_cluster(
@@ -570,17 +499,14 @@ def _probe_index_pruned_broadcast(
     nprobe,
     exclude: np.ndarray,
 ) -> dict[int, tuple[int, float]]:
-    """The scale probe for cap-bounded batches: the INDEX SIDE NEVER
-    SHUFFLES.  The batch matrix (≤ cap×dim ≈ 8 MB) broadcasts once with
-    a cluster→probing-row table; the lists scan prunes to the probed
-    ``cluster=…`` partitions at file-listing time and a mapInPandas
-    over the scan groups each Arrow batch by its partition column and
-    GEMMs it against exactly the sub-batch that probes that cluster —
-    zero exchanges, plan = PruneScan → MapInPandas → partial/final agg
-    of ≤ batch rows.  (The cogroup twin in ``_probe_index_pruned``
-    exists for OVER-cap batches where broadcasting the batch matrix is
-    the thing that must not happen; micro-batches are cap-bounded by
-    the stream trigger, so this is the steady-state tier.)"""
+    """The scale probe, for a probed working set over the cluster
+    cache's budget: the INDEX SIDE NEVER SHUFFLES.  The batch matrix
+    broadcasts once with a cluster→probing-row table; the lists scan
+    prunes to the probed ``cluster=…`` partitions at file-listing time
+    and a mapInPandas over the scan groups each Arrow batch by its
+    partition column and GEMMs it against exactly the sub-batch that
+    probes that cluster — zero exchanges, plan = PruneScan →
+    MapInPandas → partial/final agg of ≤ batch rows."""
     cent = _load_centroids(index_base)
     k = len(cent)
     _guard_lists_within_k(index_base, k)
@@ -646,94 +572,6 @@ def _probe_index_pruned_broadcast(
         row_of[int(r["vec_id"])]: (int(r["old_id"]), float(r["cos"]))
         for r in hits
     }
-
-
-def _probe_index_pruned(
-    spark: SparkSession,
-    index_base: str,
-    batch_unit: DataFrame,
-    threshold: float,
-    nprobe,
-) -> DataFrame:
-    """The scale probe, fully distributed: route each batch vector to
-    its nprobe nearest coarse clusters (broadcast-centroid GEMM,
-    map-side), COGROUP the exploded (cluster, vec_id, u) probe rows
-    with the lists scan pruned to the probed partitions, and score each
-    cluster's sub-batch against its inverted list in one blocked GEMM
-    per cogroup.  Emitted rows are true collisions only, reduced to one
-    row per batch vector by the caller's struct-min groupBy — nothing
-    here is O(batch × index).  Returns raw (vec_id, old_id, cos) hit
-    rows; the caller keeps the min-old_id hit WITH its own cosine
-    (local-tier provenance semantics).  The redelivery
-    guard (excluding the batch's own ids from the index side) is the
-    caller's anti-join."""
-    cent = _load_centroids(index_base)
-    k = len(cent)
-    _guard_lists_within_k(index_base, k)
-    eff_nprobe = k if (nprobe == "all" or nprobe is None) else min(int(nprobe), k)
-    bc_cent = spark.sparkContext.broadcast(cent)
-
-    def route(batches):  # pragma: no cover - executed on executors
-        import pandas as pd
-
-        c = bc_cent.value
-        npb = eff_nprobe
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            m = np.asarray(pdf["u"].to_list(), dtype=np.float64)
-            top = np.argsort(-(m @ c.T), axis=1)[:, :npb]
-            n = len(m)
-            yield pd.DataFrame(
-                {
-                    "cluster": top.ravel().astype(np.int32),
-                    "vec_id": np.repeat(pdf["vec_id"].to_numpy(), npb),
-                    "u": [list(pdf["u"].iloc[i]) for i in range(n) for _ in range(npb)],
-                }
-            )
-
-    routed = batch_unit.mapInPandas(
-        route, "cluster int, vec_id long, u array<double>"
-    )
-    wanted_df = routed.select("cluster").distinct()
-    wanted = [int(r["cluster"]) for r in wanted_df.collect()]
-    lists = spark.read.parquet(os.path.join(index_base, "lists")).where(
-        F.col("cluster").isin(wanted)
-    )
-
-    def score(key, probes, idx):  # pragma: no cover - executed on executors
-        import pandas as pd
-
-        if not len(probes) or not len(idx):
-            return pd.DataFrame({"vec_id": [], "old_id": [], "cos": []})
-        qu = np.asarray(probes["u"].to_list(), dtype=np.float64)
-        qids = probes["vec_id"].to_numpy()
-        outs = []
-        for s in range(0, len(idx), _GEMM_BLOCK):
-            blk = idx.iloc[s : s + _GEMM_BLOCK]
-            iu = np.asarray(blk["u"].to_list(), dtype=np.float64)
-            iids = blk["vec_id"].to_numpy()
-            sims = qu @ iu.T
-            qi, ii = np.nonzero(sims >= threshold)
-            if len(qi):
-                outs.append(
-                    pd.DataFrame(
-                        {
-                            "vec_id": qids[qi],
-                            "old_id": iids[ii],
-                            "cos": sims[qi, ii],
-                        }
-                    )
-                )
-        if not outs:
-            return pd.DataFrame({"vec_id": [], "old_id": [], "cos": []})
-        return pd.concat(outs)
-
-    return (
-        routed.groupby("cluster")
-        .cogroup(lists.groupby("cluster"))
-        .applyInPandas(score, "vec_id long, old_id long, cos double")
-    )
 
 
 def _bootstrap_index(
@@ -886,13 +724,7 @@ def embedding_ingest_batch(
     if batch_id <= int(meta.get("committed_batch", -1)):
         return {"skipped": True, "batch_id": batch_id}
 
-    cap = EMB_LOCAL_MAX_VECS
-    tb = batch_vecs.select("vec_id", "embedding").limit(cap + 1).toArrow()
-    if tb.num_rows > cap:
-        return _embedding_ingest_distributed(
-            spark, batch_vecs, index_base, out_base, batch_id,
-            threshold, eval_vecs, eval_threshold, nprobe, meta,
-        )
+    tb = batch_vecs.select("vec_id", "embedding").toArrow()
 
     import pyarrow as pa
     import pyarrow.compute as pc
@@ -922,23 +754,19 @@ def embedding_ingest_batch(
     idx_dup: dict[int, tuple[int, float]] = {}  # vec_id → (old_id, cos)
     if meta.get("index_ready") and len(e_rows):
         if _lists_bytes(index_base) <= EMB_PROBE_LOCAL_MAX_BYTES:
-            hits = _probe_index_local(index_base, u[e_rows], threshold, ids)
+            np_eff = "all"  # the young index: exact, every cluster
         else:
-            # past the young cap its cached copy of the whole index
-            # is never probed again: free it instead of extending it
-            _YOUNG_CACHE.pop(index_base, None)
             np_eff = nprobe if nprobe is not None else _index_nprobe(index_base)
-            # cluster-block cache first (zero Spark jobs, identical
-            # result — r13, VERDICT r12 #9); the broadcast-tier
-            # Spark job only when the probed working set outgrows
-            # the driver cache budget
-            hits = _probe_index_pruned_cached(
-                index_base, u[e_rows], threshold, np_eff, ids
+        # cluster-block cache first (zero Spark jobs, identical result —
+        # r13, VERDICT r12 #9); the broadcast-tier Spark job only when
+        # the probed working set outgrows the driver cache budget
+        hits = _probe_index_pruned_cached(
+            index_base, u[e_rows], threshold, np_eff, ids
+        )
+        if hits is None:
+            hits = _probe_index_pruned_broadcast(
+                spark, index_base, ids[e_rows], u[e_rows], threshold, np_eff, ids
             )
-            if hits is None:
-                hits = _probe_index_pruned_broadcast(
-                    spark, index_base, ids[e_rows], u[e_rows], threshold, np_eff, ids
-                )
         for q, (old, c) in hits.items():
             idx_dup[int(ids[e_rows[q]])] = (old, c)
 
@@ -1031,7 +859,6 @@ def embedding_ingest_batch(
             _bootstrap_index(index_base, kept_ids, kept_u)
     else:
         assign = _append_index_local(index_base, kept_ids, kept_u, batch_id)
-        _young_cache_extend(index_base, kept_ids, kept_u, batch_id)
         _cluster_cache_extend(index_base, kept_ids, kept_u, assign, batch_id)
 
     # -- commit ----------------------------------------------------------
@@ -1057,320 +884,6 @@ def embedding_ingest_batch(
         "batch_id": batch_id,
         "n_in": len(all_ids),
         "n_kept": n_kept,
-    }
-
-
-def _embedding_ingest_distributed(
-    spark: SparkSession,
-    batch_vecs: DataFrame,
-    index_base: str,
-    out_base: str,
-    batch_id: int,
-    threshold: float,
-    eval_vecs,
-    eval_threshold: float,
-    nprobe,
-    meta: dict,
-) -> dict:
-    """Over-cap twin: same semantics with Spark-side geometry.  The
-    batch normalizes in mapInPandas, the cross probe is the pruned scan
-    (its collect is ≤ batch rows by the groupBy), within-batch pairs
-    come from the packed block-GEMM grid (the q11_embedding_neardup
-    kernel shape), components from dedup_clusters_auto, and the routed
-    writes/index append are Spark jobs.  Identity with the local tier
-    is pytest-gated at a forced-low cap.
-
-    The decision work that is inherently per-component (union-find +
-    survivor rule) runs over COLLISION PAIRS ONLY — near-dup pairs, not
-    all pairs — via the distributed connected-components operator, so
-    nothing here collects O(batch²)."""
-    from frizzle_spark.operators.dedup import dedup_clusters_auto
-    from frizzle_spark.operators.similarity import _pack_blocks
-
-    valid = batch_vecs.where(
-        F.col("embedding").isNotNull() & (F.size("embedding") > 0)
-    )
-    invalid = batch_vecs.where(
-        F.col("embedding").isNull() | (F.size("embedding") <= 0)
-    ).select("vec_id")
-
-    def normalize(batches):  # pragma: no cover - executed on executors
-        import pandas as pd
-
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            m = np.asarray(pdf["embedding"].to_list(), dtype=np.float64)
-            nrm = np.linalg.norm(m, axis=1, keepdims=True)
-            nrm[nrm == 0] = 1.0
-            m = m / nrm
-            yield pd.DataFrame(
-                {"vec_id": pdf["vec_id"], "u": list(map(list, m))}
-            )
-
-    unit = valid.mapInPandas(
-        normalize, "vec_id long, u array<double>"
-    ).localCheckpoint()
-
-    # -- decon -----------------------------------------------------------
-    if eval_vecs is not None:
-        bc_eval = spark.sparkContext.broadcast(
-            np.asarray(eval_vecs, dtype=np.float64)
-        )
-
-        def decon(batches):  # pragma: no cover - executed on executors
-            import pandas as pd
-
-            ev = bc_eval.value
-            for pdf in batches:
-                if not len(pdf):
-                    continue
-                m = np.asarray(pdf["u"].to_list(), dtype=np.float64)
-                mx = (m @ ev.T).max(axis=1) if len(ev) else np.zeros(len(m))
-                yield pd.DataFrame({"vec_id": pdf["vec_id"], "esim": mx})
-
-        esims = unit.mapInPandas(decon, "vec_id long, esim double")
-        contaminated = esims.where(
-            F.col("esim") >= eval_threshold
-        ).localCheckpoint()
-    else:
-        contaminated = spark.createDataFrame([], "vec_id long, esim double")
-    clean = unit.join(contaminated.select("vec_id"), "vec_id", "left_anti")
-
-    # -- cross probe (fully distributed; one row per hit vector) --------
-    if meta.get("index_ready"):
-        idx_dup_df = (
-            _probe_index_pruned(
-                spark,
-                index_base,
-                clean,
-                threshold,
-                nprobe if nprobe is not None else _index_nprobe(index_base),
-            )
-            .join(
-                batch_vecs.select(F.col("vec_id").alias("old_id")),
-                "old_id",
-                "left_anti",  # redelivery guard
-            )
-            .groupBy("vec_id")
-            # struct-min: (old_id, cos) from the SAME hit — matches the
-            # local tier's provenance semantics (r12, ADVICE low)
-            .agg(F.min(F.struct("old_id", "cos")).alias("h"))
-            .select(
-                "vec_id",
-                F.col("h.old_id").alias("idx_dup_of"),
-                F.col("h.cos").alias("idx_cos"),
-            )
-            .localCheckpoint()
-        )
-    else:
-        idx_dup_df = spark.createDataFrame(
-            [], "vec_id long, idx_dup_of long, idx_cos double"
-        )
-
-    # -- within-batch pairs via the packed block grid --------------------
-    n = clean.count()
-    packed = _pack_blocks(clean, max(n, 1), 1024)
-    a = packed.select(
-        F.col("blk").alias("b1"),
-        F.col("ids").alias("ids1"),
-        F.col("mat").alias("m1"),
-    )
-    b = packed.select(
-        F.col("blk").alias("b2"),
-        F.col("ids").alias("ids2"),
-        F.col("mat").alias("m2"),
-    )
-    grid = a.join(b, F.col("b1") <= F.col("b2"))
-
-    def score(batches):  # pragma: no cover - executed on executors
-        import pandas as pd
-
-        for pdf in batches:
-            for row in pdf.itertuples(index=False):
-                ids1 = np.asarray(row.ids1, dtype=np.int64)
-                ids2 = np.asarray(row.ids2, dtype=np.int64)
-                m1 = np.asarray(row.m1, dtype=np.float64).reshape(
-                    len(ids1), -1
-                )
-                m2 = np.asarray(row.m2, dtype=np.float64).reshape(
-                    len(ids2), -1
-                )
-                sims = m1 @ m2.T
-                if row.b1 == row.b2:
-                    sims = np.triu(sims, k=1)
-                i, j = np.nonzero(sims >= threshold)
-                if not len(i):
-                    continue
-                yield pd.DataFrame(
-                    {
-                        "id_a": np.minimum(ids1[i], ids2[j]),
-                        "id_b": np.maximum(ids1[i], ids2[j]),
-                        "cos": sims[i, j],
-                    }
-                )
-
-    pairs = grid.mapInPandas(
-        score, "id_a long, id_b long, cos double"
-    ).localCheckpoint()
-    labels = dedup_clusters_auto(
-        spark, pairs.select(F.col("id_a").alias("d1"), F.col("id_b").alias("d2"))
-    )
-    evidence = (
-        pairs.select(F.col("id_a").alias("vec_id"), "cos")
-        .unionByName(pairs.select(F.col("id_b").alias("vec_id"), "cos"))
-        .groupBy("vec_id")
-        .agg(F.max("cos").alias("pair_cos"))
-    )
-
-    m = (
-        clean.select("vec_id")
-        .join(labels, F.col("vec_id") == F.col("doc_id"), "left_outer")
-        .select(
-            "vec_id",
-            F.coalesce("cluster_rep", F.col("vec_id")).alias("cluster"),
-        )
-        .join(idx_dup_df, "vec_id", "left_outer")
-    )
-    keep_ids = (
-        m.where(F.col("idx_dup_of").isNull())
-        .groupBy("cluster")
-        .agg(F.min("vec_id").alias("keep_id"))
-    )
-    assign = (
-        m.join(keep_ids, "cluster", "left_outer")
-        .join(evidence, "vec_id", "left_outer")
-        .select(
-            "vec_id",
-            F.when(F.col("vec_id") == F.col("keep_id"), F.lit("corpus"))
-            .otherwise(F.lit("dlq"))
-            .alias("dest"),
-            F.when(
-                F.col("vec_id") == F.col("keep_id"), F.lit(None).cast("string")
-            )
-            .when(F.col("idx_dup_of").isNotNull(), F.lit("dup_index"))
-            .otherwise(F.lit("dup_batch"))
-            .alias("reason"),
-            F.when(F.col("vec_id") == F.col("keep_id"), F.lit(None).cast("long"))
-            .otherwise(F.coalesce("idx_dup_of", "keep_id"))
-            .alias("dup_of"),
-            F.when(
-                F.col("vec_id") == F.col("keep_id"), F.lit(None).cast("double")
-            )
-            .when(F.col("idx_dup_of").isNotNull(), F.round("idx_cos", 6))
-            .otherwise(F.round(F.coalesce("pair_cos", F.lit(1.0)), 6))
-            .alias("cos_sim"),
-        )
-        .unionByName(
-            contaminated.select(
-                "vec_id",
-                F.lit("dlq").alias("dest"),
-                F.lit("contaminated").alias("reason"),
-                F.lit(None).cast("long").alias("dup_of"),
-                F.round("esim", 6).alias("cos_sim"),
-            )
-        )
-        .unionByName(
-            invalid.select(
-                "vec_id",
-                F.lit("dlq").alias("dest"),
-                F.lit("invalid").alias("reason"),
-                F.lit(None).cast("long").alias("dup_of"),
-                F.lit(None).cast("double").alias("cos_sim"),
-            )
-        )
-        .localCheckpoint(eager=True)
-    )
-
-    keep_set = assign.where(F.col("dest") == "corpus").select("vec_id")
-    batch_vecs.join(keep_set, "vec_id").select(
-        "vec_id", "embedding"
-    ).write.mode("overwrite").parquet(
-        f"{out_base}/corpus/batch_id={batch_id}"
-    )
-    assign.where(F.col("dest") == "dlq").select(
-        "vec_id", "reason", "dup_of", "cos_sim"
-    ).write.mode("overwrite").parquet(f"{out_base}/dlq/batch_id={batch_id}")
-
-    kept_unit = unit.join(keep_set, "vec_id")
-    n_kept = kept_unit.count()
-    n_in = batch_vecs.count()
-    if not meta.get("index_ready"):
-        if n_kept:
-            ktb = kept_unit.toArrow()  # first batch only; cap-bounded in
-            # practice (a bus is bootstrapped once, usually small) —
-            # past bootstrap every batch takes the append path below
-            _bootstrap_index(
-                index_base,
-                ktb["vec_id"].to_numpy().astype(np.int64, copy=False),
-                np.asarray(ktb["u"].to_pylist(), dtype=np.float64),
-            )
-    else:
-        from frizzle_spark.operators.ann_index import assign_clusters
-
-        # Deterministic per-batch publication (r12, ADVICE low): a bare
-        # mode("append") writes UUID part names, so a crash between the
-        # append and the meta commit followed by redelivery would
-        # duplicate survivor rows in the lists forever.  Instead the
-        # assignment lands in a per-batch staging dir (overwrite), any
-        # leftover files of THIS batch are removed from the lists, and
-        # the staged parts are published under batch-keyed names — the
-        # same idempotence-by-filename unit as the local tier's
-        # part-embbatch-<id> files and the per-batch sink partitions.
-        import shutil
-
-        lists_root = os.path.join(index_base, "lists")
-        stage_root = os.path.join(index_base, "_append_stage")
-        stage = os.path.join(stage_root, f"batch={batch_id}")
-        assign_clusters(spark, index_base, kept_unit).write.mode(
-            "overwrite"
-        ).partitionBy("cluster").parquet(stage)
-        if os.path.isdir(lists_root):  # redelivery: drop this batch's files
-            for d in os.listdir(lists_root):
-                dd = os.path.join(lists_root, d)
-                if not d.startswith("cluster=") or not os.path.isdir(dd):
-                    continue
-                for f in os.listdir(dd):
-                    if f.startswith(f"part-embbatch-{batch_id}-"):
-                        os.remove(os.path.join(dd, f))
-        for d in sorted(os.listdir(stage)):
-            src = os.path.join(stage, d)
-            if not d.startswith("cluster=") or not os.path.isdir(src):
-                continue
-            dst = os.path.join(lists_root, d)
-            os.makedirs(dst, exist_ok=True)
-            parts = sorted(
-                f for f in os.listdir(src) if f.endswith(".parquet")
-            )
-            for i, f in enumerate(parts):
-                os.replace(
-                    os.path.join(src, f),
-                    os.path.join(dst, f"part-embbatch-{batch_id}-{i}.parquet"),
-                )
-        shutil.rmtree(stage_root, ignore_errors=True)
-
-    n_total_kept = int(meta.get("n_vecs_kept", 0)) + int(n_kept)
-    new_meta = {
-        **meta,
-        "committed_batch": batch_id,
-        "index_ready": bool(meta.get("index_ready")) or n_kept > 0,
-        "n_vecs_in": int(meta.get("n_vecs_in", 0)) + int(n_in),
-        "n_vecs_kept": n_total_kept,
-    }
-    if new_meta["index_ready"]:
-        # nprobe is deliberately NOT cached into the bus meta (r12,
-        # ADVICE medium): probes read the index's current value each
-        # batch (_index_nprobe), so a retrain-compact's larger k/nprobe
-        # takes effect immediately instead of probing an ever-smaller
-        # fraction of the grown index with the bootstrap value
-        new_meta.pop("nprobe", None)  # drop any stale pre-r12 cache
-        _sync_index_n_vectors(index_base, n_total_kept)
-    _write_emb_meta(out_base, new_meta)
-    return {
-        "skipped": False,
-        "batch_id": batch_id,
-        "n_in": int(n_in),
-        "n_kept": int(n_kept),
     }
 
 

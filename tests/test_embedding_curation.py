@@ -9,6 +9,7 @@ from __future__ import annotations
 
 import json
 import os
+from pathlib import Path
 
 import numpy as np
 import pytest
@@ -295,27 +296,87 @@ def test_sink_and_list_files_keep_their_bytes(spark, bases, tmp_path):
     assert file_bytes(cf) == want
 
 
-def test_forced_distributed_tier_identity(spark, bases, tmp_path, monkeypatch):
-    base = _mk_vecs(40)
-    batches = [
-        (range(20), base[:20]),
-        (
-            list(range(20, 30)) + [103, 200, 201],
-            list(base[20:30]) + [_noisy(base[3]), base[35], _noisy(base[35])],
-        ),
-    ]
-    _ingest(spark, bases, batches)
-    want = _assignment_rows(spark, bases[1])
+def _plane(seed: int):
+    """Unit vectors at angle t from x in the plane of a random
+    orthonormal pair (x, y)."""
+    x, y = _mk_vecs(2, seed=seed)
+    y = y - (y @ x) * x
+    y /= np.linalg.norm(y)
+    return lambda t: np.cos(t) * x + np.sin(t) * y
 
-    ib2, ob2 = str(tmp_path / "i2"), str(tmp_path / "o2")
-    monkeypatch.setattr(EC, "EMB_LOCAL_MAX_VECS", 0)
-    _ingest(spark, (ib2, ob2), batches)
-    assert _assignment_rows(spark, ob2) == want
+
+def test_over_cap_batch_decided_whole(spark, bases, tmp_path, monkeypatch):
+    # a batch over EMB_LOCAL_MAX_VECS takes the same body as any other:
+    # one Arrow collect of the whole batch, one decision over it —
+    # components that chain past τ, a later member bridging two
+    # components, an index dup inside a component, NULL / empty and
+    # contaminated vectors — and a redelivery rewrites the same bytes
+    collected = []
+    frame = type(spark.range(1))
+    to_arrow = frame.toArrow
+
+    def spy(df):
+        tb = to_arrow(df)
+        if "embedding" in tb.column_names:
+            collected.append(tb.num_rows)
+        return tb
+
+    monkeypatch.setattr(frame, "toArrow", spy)
+    monkeypatch.setattr(EC, "EMB_LOCAL_MAX_VECS", 4)
+    base = _mk_vecs(40)
+    ev = _mk_vecs(1, seed=5)
+    th = np.arccos(0.93)  # neighbours at 0.93; two steps apart at 0.73
+    chain, idx, bridge = _plane(21), _plane(22), _plane(23)
+    phi = np.arccos(0.7)  # P, Q at 0.7; their bisector R at 0.92 to both
+    b0 = (list(range(20)) + [30], list(base[:20]) + [idx(0)])
+    b1 = {
+        100: chain(0), 104: chain(th), 109: chain(2 * th),  # chain
+        101: bridge(0), 105: bridge(phi), 112: bridge(phi / 2),  # bridge
+        102: idx(th), 106: idx(2 * th),  # 102 an index dup of 30
+        103: base[20], 107: base[21], 108: base[22], 110: base[23],
+        111: base[24], 113: None, 114: [], 115: _noisy(ev[0]),
+        116: _noisy(base[3]),
+    }
+    batches = [b0, (list(b1), list(b1.values()))]
+    index, out = bases
+    _ingest(spark, bases, batches, eval_vecs=ev)
+    assert collected == [21, 17]  # one collect per batch, every row
+    want = _assignment_rows(spark, out)
+    rows = {vid: tuple(rest) for vid, *rest in want}
+    assert rows[104] == rows[109] == ("dlq", "dup_batch", 100)
+    assert rows[105] == rows[112] == ("dlq", "dup_batch", 101)
+    assert rows[102] == ("dlq", "dup_index", 30)
+    assert rows[106][0] == rows[100][0] == rows[101][0] == "corpus"
+    assert rows[113] == rows[114] == ("dlq", "invalid", None)
+    assert rows[115] == ("dlq", "contaminated", None)
+    assert rows[116] == ("dlq", "dup_index", 3)
+
+    def files():
+        return {
+            os.path.join(root, f): Path(root, f).read_bytes()
+            for top in bases
+            for root, _d, fs in os.walk(top)
+            for f in fs
+            if f.endswith(".parquet")
+        }
+
+    before = files()
+    EC._write_emb_meta(
+        out,
+        json.load(open(os.path.join(out, EC.EMB_INGEST_META)))
+        | {"committed_batch": 0, "n_vecs_in": 21, "n_vecs_kept": 21},
+    )
+    res = EC.embedding_ingest_batch(
+        spark, _df(spark, *batches[1]), index, out, 1, eval_vecs=ev
+    )
+    assert not res["skipped"]
+    assert files() == before
+    assert _assignment_rows(spark, out) == want
 
 
 def test_forced_pruned_probe_identity(spark, bases, tmp_path, monkeypatch):
-    # same decisions whether the probe runs the young-index driver tier
-    # or the cogrouped cluster-pruned Spark tier with nprobe = all
+    # same decisions whether the probe runs the cluster-cached driver
+    # tier or, with a zero cache budget, the broadcast Spark tier
     base = _mk_vecs(60)
     batches = [
         (range(30), base[:30]),
@@ -328,8 +389,8 @@ def test_forced_pruned_probe_identity(spark, bases, tmp_path, monkeypatch):
     want = _assignment_rows(spark, bases[1])
 
     ib2, ob2 = str(tmp_path / "i2"), str(tmp_path / "o2")
-    monkeypatch.setattr(EC, "EMB_PROBE_LOCAL_MAX_BYTES", 0)
-    _ingest(spark, (ib2, ob2), batches, nprobe="all")
+    monkeypatch.setattr(EC, "EMB_CLUSTER_CACHE_MAX_BYTES", 0)
+    _ingest(spark, (ib2, ob2), batches)
     assert _assignment_rows(spark, ob2) == want
 
 
@@ -430,23 +491,29 @@ def test_cache_extend_drops_block_written_between_probe_and_append(
     import pyarrow as pa
     import pyarrow.parquet as pq
 
+    # young: the exact all-cluster probe under the young cap; cluster:
+    # past the cap with the index's default nprobe, where only the
+    # batch's probed clusters are cached
     if tier == "cluster":
         monkeypatch.setattr(EC, "EMB_PROBE_LOCAL_MAX_BYTES", 0)
-    EC._YOUNG_CACHE.clear()
     EC._CLUSTER_CACHE.clear()
     index, out = bases
     base = _mk_vecs(50)
-    ext = _mk_vecs(1, seed=99)[0]
+    ext = {}
     _ingest(spark, bases, [(range(40), base[:40])])
     append = EC._append_index_local
 
     def external_write_then_append(index_base, kept_ids, kept_u, batch_id, cent=None):
-        c = int(np.argmax(EC._load_centroids(index_base) @ kept_u[0]))
+        # the external vector is the centroid of a cluster this append
+        # touches, so the next probe routes to that cluster first
+        cents = EC._load_centroids(index_base)
+        c = int(np.argmax(cents @ kept_u[0]))
+        ext["u"] = cents[c] / np.linalg.norm(cents[c])
         pq.write_table(
             pa.table(
                 {
                     "vec_id": pa.array([7000], pa.int64()),
-                    "u": pa.array([list(map(float, ext))], pa.list_(pa.float64())),
+                    "u": pa.array([list(map(float, ext["u"]))], pa.list_(pa.float64())),
                 }
             ),
             os.path.join(index_base, "lists", f"cluster={c}", "part-ext.parquet"),
@@ -455,11 +522,11 @@ def test_cache_extend_drops_block_written_between_probe_and_append(
 
     monkeypatch.setattr(EC, "_append_index_local", external_write_then_append)
     EC.embedding_ingest_batch(
-        spark, _df(spark, range(40, 50), base[40:50]), index, out, 1, nprobe="all"
+        spark, _df(spark, range(40, 50), base[40:50]), index, out, 1
     )
     monkeypatch.setattr(EC, "_append_index_local", append)
     EC.embedding_ingest_batch(
-        spark, _df(spark, [8000], [_noisy(ext)]), index, out, 2, nprobe="all"
+        spark, _df(spark, [8000], [_noisy(ext["u"])]), index, out, 2
     )
     rows = {vid: rest for vid, *rest in _assignment_rows(spark, out)}
     assert rows[8000] == ["dlq", "dup_index", 7000]
@@ -620,10 +687,5 @@ def test_retrain_compaction_identity_and_guard(spark, bases, tmp_path):
         os.path.join(index, "lists", src),
         os.path.join(index, "lists", f"cluster={k_now + 5}"),
     )
-    import pandas as pd
-
-    batch_unit = spark.createDataFrame(
-        pd.DataFrame({"vec_id": [1], "u": [list(map(float, base[0]))]})
-    )
     with pytest.raises(RuntimeError, match="interrupted"):
-        EC._probe_index_pruned(spark, index, batch_unit, 0.9, 2)
+        EC._probe_index_pruned_cached(index, base[:1], 0.9, 2, NO_IDS)
