@@ -1409,6 +1409,43 @@ def _collect_key_pairs_capped(
 COMPACT_TARGET_ROWS = 2_000_000  # per output file (~48 MB band rows)
 
 
+def _footer_rows(root: str, part_col: str | None) -> int:
+    """Row count of one index table, summed from its files' footers —
+    no data read and no Spark job."""
+    import pyarrow.parquet as pq
+
+    return sum(
+        pq.ParquetFile(p).metadata.num_rows
+        for p, _ in _list_index_files(root, part_col)
+    )
+
+
+def _read_index_signatures(base_path: str):
+    """(ids (n,) int64, mat (n, 64) int64) of every stored signature
+    row, in file order, whether Spark or pyarrow wrote the file."""
+    import numpy as np
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+
+    ids, mats = [], []
+    for p, _ in _list_index_files(f"{base_path}/signatures", None):
+        with pq.ParquetFile(p) as f:
+            tb = f.read(columns=["doc_id", "sig"], use_threads=False)
+        flat = pc.list_flatten(tb["sig"]).to_numpy()
+        if flat.size != tb.num_rows * MINHASH_PERMS:
+            raise ValueError(
+                f"{p}: signature rows are not {MINHASH_PERMS} wide"
+            )
+        ids.append(tb["doc_id"].to_numpy())
+        mats.append(flat.reshape(-1, MINHASH_PERMS))
+    if not ids:
+        return np.empty(0, np.int64), np.empty((0, MINHASH_PERMS), np.int64)
+    return (
+        np.concatenate(ids).astype(np.int64, copy=False),
+        np.concatenate(mats).astype(np.int64, copy=False),
+    )
+
+
 def compact_minhash_index(spark: SparkSession, base_path: str) -> dict:
     """Merge an append-accumulated MinHash index into few large SORTED
     files — the streaming small-file problem applied to the probe
@@ -1416,63 +1453,103 @@ def compact_minhash_index(spark: SparkSession, base_path: str) -> dict:
     the FULL hash range (MinHash minima are uniform), so after many
     batches the per-file/row-group min-max statistics stop separating
     ranges and the rowgroup probe tier degrades to a full scan.
-    Compaction repartitions each table BY RANGE on its probe key
-    (band_hash / doc_id) and sorts within partitions: files and row
-    groups become narrow and disjoint again, restoring the
-    O(batch_keys x row_group) probe I/O floor.  Probe identity across
-    compaction is pytest-gated; CURATION_PROBE_SCALE.json carries the
-    measured before/after curve.
+    Compaction rewrites each table sorted on its probe key (band_hash /
+    doc_id): files and row groups become narrow and disjoint again,
+    restoring the O(batch_keys x row_group) probe I/O floor.  Probe
+    identity across compaction is pytest-gated on both tiers;
+    CURATION_PROBE_SCALE.json carries the measured before/after curve.
+
+    Two tiers, gated on the whole index (bands + signatures) on disk:
+
+    * at most ``PROBE_LOCAL_MAX_INDEX_BYTES`` — the cap under which the
+      bus's probe already reads the entire band table into the driver
+      every batch — the index is REBUILT from its signature table on
+      the driver with pyarrow: one signature file sorted by doc_id and
+      one file per band sorted by band_hash, through the writer that
+      ``append_minhash_index_local`` uses.  No Spark job.  Every writer
+      puts signatures before bands, so the bands are always derivable
+      from the signatures: a crash-truncated append (signatures in,
+      some band files missing) comes out healed;
+    * over the cap, Spark repartitions each table BY RANGE on its probe
+      key and sorts within partitions.
 
     Two-phase local/shared-POSIX move: write to a sibling tmp dir,
-    verify row counts, then swap directories.  The index is derived,
-    rebuildable state — run compaction between micro-batches (the bus
-    is the only writer; probes in other sessions should not race the
-    swap on a non-atomic filesystem).
+    verify row counts from the tmp files' footers (signature rows out
+    equal signature rows in; band rows out equal LSH_BANDS x signature
+    rows and are at least the band rows in — a ValueError otherwise,
+    with the live index untouched), then swap directories.  The index
+    is derived, rebuildable state — run compaction between
+    micro-batches (the bus is the only writer; probes in other sessions
+    should not race the swap on a non-atomic filesystem).
 
-    Returns {"bands_rows": n, "signatures_rows": n, "files_before": n,
-    "files_after": n}.
+    Returns {"tier": "local" | "spark", "bands_rows": n,
+    "signatures_rows": n, "files_before": n, "files_after": n,
+    "manifest_rows": n} — row counts of the compacted index.
     """
     import os
     import shutil
 
-    files_before = len(_list_index_files(f"{base_path}/bands", "band_id")) + len(
-        _list_index_files(f"{base_path}/signatures", None)
-    )
+    band_files = _list_index_files(f"{base_path}/bands", "band_id")
+    sig_files = _list_index_files(f"{base_path}/signatures", None)
+    files_before = len(band_files) + len(sig_files)
+    idx_bytes = sum(os.stat(p).st_size for p, _ in band_files + sig_files)
+    bands_tmp = f"{base_path}/bands_compact_tmp"
+    sigs_tmp = f"{base_path}/signatures_compact_tmp"
 
-    bands = spark.read.schema("doc_id long, band_hash long, band_id int").parquet(
-        f"{base_path}/bands"
-    )
-    n_bands = bands.count()
-    nparts = max(LSH_BANDS, int(n_bands // COMPACT_TARGET_ROWS) + 1)
-    (
-        bands.repartitionByRange(nparts, "band_id", "band_hash")
-        .sortWithinPartitions("band_id", "band_hash")
-        .write.mode("overwrite")
-        .option("parquet.block.size", str(_BAND_RG_BYTES))
-        .option("parquet.page.size", str(1 << 16))
-        .partitionBy("band_id")
-        .parquet(f"{base_path}/bands_compact_tmp")
-    )
-    sigs = spark.read.schema("doc_id long, sig array<long>").parquet(
-        f"{base_path}/signatures"
-    )
-    n_sigs = sigs.count()
-    nparts_s = max(1, int(n_sigs * 520 // (COMPACT_TARGET_ROWS * 24)) + 1)
-    (
-        sigs.repartitionByRange(nparts_s, "doc_id")
-        .sortWithinPartitions("doc_id")
-        .write.mode("overwrite")
-        .option("parquet.block.size", str(_SIG_RG_BYTES))
-        .parquet(f"{base_path}/signatures_compact_tmp")
-    )
-    for table, tmp in (
-        ("bands", "bands_compact_tmp"),
-        ("signatures", "signatures_compact_tmp"),
-    ):
+    if idx_bytes <= PROBE_LOCAL_MAX_INDEX_BYTES:
+        tier = "local"
+        n_bands_in = _footer_rows(f"{base_path}/bands", "band_id")
+        ids, mat = _read_index_signatures(base_path)
+        n_sigs_in = int(ids.size)
+        for tmp in (bands_tmp, sigs_tmp):
+            shutil.rmtree(tmp, ignore_errors=True)
+            os.makedirs(tmp)
+        _write_index_local(ids, mat, sigs_tmp, bands_tmp)
+    else:
+        tier = "spark"
+        bands = spark.read.schema(
+            "doc_id long, band_hash long, band_id int"
+        ).parquet(f"{base_path}/bands")
+        n_bands_in = bands.count()
+        nparts = max(LSH_BANDS, int(n_bands_in // COMPACT_TARGET_ROWS) + 1)
+        (
+            bands.repartitionByRange(nparts, "band_id", "band_hash")
+            .sortWithinPartitions("band_id", "band_hash")
+            .write.mode("overwrite")
+            .option("parquet.block.size", str(_BAND_RG_BYTES))
+            .option("parquet.page.size", str(1 << 16))
+            .partitionBy("band_id")
+            .parquet(bands_tmp)
+        )
+        sigs = spark.read.schema("doc_id long, sig array<long>").parquet(
+            f"{base_path}/signatures"
+        )
+        n_sigs_in = sigs.count()
+        nparts_s = max(1, int(n_sigs_in * 520 // (COMPACT_TARGET_ROWS * 24)) + 1)
+        (
+            sigs.repartitionByRange(nparts_s, "doc_id")
+            .sortWithinPartitions("doc_id")
+            .write.mode("overwrite")
+            .option("parquet.block.size", str(_SIG_RG_BYTES))
+            .parquet(sigs_tmp)
+        )
+
+    n_sigs = _footer_rows(sigs_tmp, None)
+    n_bands = _footer_rows(bands_tmp, "band_id")
+    if n_sigs != n_sigs_in:
+        raise ValueError(
+            f"index compaction wrote {n_sigs} signature rows, read {n_sigs_in}"
+        )
+    if n_bands != LSH_BANDS * n_sigs or n_bands < n_bands_in:
+        raise ValueError(
+            f"index compaction wrote {n_bands} band rows for {n_sigs} "
+            f"signatures ({LSH_BANDS} each) from {n_bands_in} band rows"
+        )
+    for table, tmp in (("bands", bands_tmp), ("signatures", sigs_tmp)):
         old = os.path.join(base_path, f"_{table}_precompact")
         shutil.rmtree(old, ignore_errors=True)
         os.rename(os.path.join(base_path, table), old)
-        os.rename(os.path.join(base_path, tmp), os.path.join(base_path, table))
+        os.rename(tmp, os.path.join(base_path, table))
         shutil.rmtree(old, ignore_errors=True)
     files_after = len(_list_index_files(f"{base_path}/bands", "band_id")) + len(
         _list_index_files(f"{base_path}/signatures", None)
@@ -1484,6 +1561,7 @@ def compact_minhash_index(spark: SparkSession, base_path: str) -> dict:
         f"{base_path}/bands", "band_hash", "band_id"
     ) + _write_rg_manifest(f"{base_path}/signatures", "doc_id", None)
     return {
+        "tier": tier,
         "bands_rows": int(n_bands),
         "signatures_rows": int(n_sigs),
         "files_before": files_before,
@@ -1492,17 +1570,13 @@ def compact_minhash_index(spark: SparkSession, base_path: str) -> dict:
     }
 
 
-def append_minhash_index_local(ids, mat, base_path: str) -> int:
-    """Driver-side ``append_minhash_index_sigs`` twin for an ALREADY
-    COLLECTED signature slice — ``ids`` (n,) int64 doc ids, ``mat``
-    (n, 64) int64 signatures — the curation bus's driver-decide tier
-    has the batch's signatures in hand, so the index append is
-    four-figure rows of numpy + pyarrow, not two Spark write jobs
-    (measured ~1.7 s of pure job overhead per micro-batch).  Same
-    layout contract as ``_write_sig_slice``: signatures sorted by
-    doc_id, per-band files sorted by band_hash, small row groups —
-    probe-identity vs the Spark-written index is pytest-gated.  Returns
-    the number of signatures appended."""
+def _write_index_local(ids, mat, sig_dir: str, bands_dir: str) -> None:
+    """One pyarrow write of a signature slice — ``ids`` (n,) int64,
+    ``mat`` (n, 64) int64 — in the probe layout: a signature file
+    sorted by doc_id into ``sig_dir``, THEN one file per band sorted by
+    band_hash under ``bands_dir/band_id=b``.  Signatures go first, so a
+    crash part-way leaves bands that compaction can rebuild from them.
+    Small row groups, as ``_write_sig_slice``."""
     import os
     import uuid
 
@@ -1510,21 +1584,21 @@ def append_minhash_index_local(ids, mat, base_path: str) -> int:
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    ids = np.asarray(ids, dtype=np.int64)
-    mat = np.asarray(mat, dtype=np.int64)
-    if ids.size == 0:
-        return 0
-    _stamp_index_format(base_path, "append")
+    n = ids.size
     tag = uuid.uuid4().hex
-
     order = np.argsort(ids, kind="stable")
     sig_tb = pa.table(
         {
             "doc_id": pa.array(ids[order], pa.int64()),
-            "sig": pa.array(list(mat[order]), pa.list_(pa.int64())),
+            "sig": pa.ListArray.from_arrays(
+                pa.array(
+                    np.arange(0, n * MINHASH_PERMS + 1, MINHASH_PERMS,
+                              dtype=np.int32)
+                ),
+                pa.array(np.ascontiguousarray(mat[order]).ravel(), pa.int64()),
+            ),
         }
     )
-    sig_dir = os.path.join(base_path, "signatures")
     os.makedirs(sig_dir, exist_ok=True)
     pq.write_table(
         sig_tb,
@@ -1542,12 +1616,34 @@ def append_minhash_index_local(ids, mat, base_path: str) -> int:
                 "band_hash": pa.array(bh[o, b], pa.int64()),
             }
         )
-        d = os.path.join(base_path, "bands", f"band_id={b}")
+        d = os.path.join(bands_dir, f"band_id={b}")
         os.makedirs(d, exist_ok=True)
         pq.write_table(
             tb, os.path.join(d, f"part-local-{tag}.parquet"),
             row_group_size=band_rg,
         )
+
+
+def append_minhash_index_local(ids, mat, base_path: str) -> int:
+    """Driver-side ``append_minhash_index_sigs`` twin for an ALREADY
+    COLLECTED signature slice — ``ids`` (n,) int64 doc ids, ``mat``
+    (n, 64) int64 signatures — the curation bus's driver-decide tier
+    has the batch's signatures in hand, so the index append is
+    four-figure rows of numpy + pyarrow, not two Spark write jobs
+    (measured ~1.7 s of pure job overhead per micro-batch).  Same
+    layout contract as ``_write_sig_slice`` (``_write_index_local``) —
+    probe-identity vs the Spark-written index is pytest-gated.  Returns
+    the number of signatures appended."""
+    import numpy as np
+
+    ids = np.asarray(ids, dtype=np.int64)
+    mat = np.asarray(mat, dtype=np.int64)
+    if ids.size == 0:
+        return 0
+    _stamp_index_format(base_path, "append")
+    _write_index_local(
+        ids, mat, f"{base_path}/signatures", f"{base_path}/bands"
+    )
     return int(ids.size)
 
 
@@ -1591,7 +1687,8 @@ def incremental_neardup_local(ids, mat, index_base: str) -> list[tuple]:
         olds = []
         hashes = []
         for p in paths:
-            tb = pq.read_table(p, columns=["doc_id", "band_hash"])
+            with pq.ParquetFile(p) as f:
+                tb = f.read(columns=["doc_id", "band_hash"], use_threads=False)
             olds.append(tb["doc_id"].to_numpy().astype(np.int64, copy=False))
             hashes.append(
                 tb["band_hash"].to_numpy().astype(np.int64, copy=False)

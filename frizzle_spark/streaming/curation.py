@@ -117,8 +117,8 @@ def _decide_local(
     equality in the distributed twin IS tuple equality — the band hash
     only compresses the tuple), union-find the within-batch
     near-dup components, apply the survivor rule, and return
-    (assignment as a literal local relation, the raw assignment rows,
-    the survivors' signature rows for the driver-side index append,
+    (the assignment rows, the survivors' signature rows for the
+    driver-side index append,
     the survivors' (doc_id, text) rows for the driver-side corpus
     write — or None when the text gate declined the pull — n_in,
     n_kept).  Returns None when any collected set exceeds its cap — the
@@ -329,7 +329,6 @@ def _decide_local(
             # coalesce(idx_dup_of, keep_id) as in the distributed twin;
             # k can't be None here (an ineligible doc is an index dup)
             rows.append((d, "dlq", "dup_batch", k))
-    assign = spark.createDataFrame(rows, ASSIGNMENT_SCHEMA)
 
     # survivor text for the driver-side corpus write: already in hand
     # when it rode the id collect; otherwise pulled now, gated on the
@@ -363,7 +362,7 @@ def _decide_local(
         kept_sig = (sids[kmask], mat[kmask])
     else:
         kept_sig = (sids, mat)
-    return assign, rows, kept_sig, kept_text, len(doc_ids), n_kept, batch_bytes
+    return rows, kept_sig, kept_text, len(doc_ids), n_kept, batch_bytes
 
 
 def _decide_distributed(
@@ -541,13 +540,15 @@ def dedup_ingest_batch(
         # identity-gated in pytest.  The local assignment is a literal
         # local relation, so the decision is pinned by construction (an
         # executor retry can never re-derive a different verdict — the
-        # job the eager checkpoint used to do).
+        # job the eager checkpoint used to do), built only where the
+        # corpus takes the Spark write.
         decided = _decide_local(
             spark, batch, sigs, sigs_materialized, index_base, keep, meta
         )
         _mark("decide")
+        assign = None
         if decided is not None:
-            (assign, assign_rows, kept_sig, kept_text, n_in, n_kept,
+            (assign_rows, kept_sig, kept_text, n_in, n_kept,
              batch_bytes) = decided
         else:
             assign = _decide_distributed(
@@ -568,6 +569,8 @@ def dedup_ingest_batch(
         if kept_text is not None:
             write_batch_rows(out, "corpus", batch_id, kept_text, _CORPUS_COLS)
         else:
+            if assign is None:
+                assign = spark.createDataFrame(assign_rows, ASSIGNMENT_SCHEMA)
             keep_set = assign.where(F.col("dest") == "corpus").select("doc_id")
             # the broadcast hint is safe only when the survivor count is
             # known-bounded: always on the local tier (≤ 64k by cap), and

@@ -28,10 +28,14 @@ is invisible (negative ids are excluded unless listed in
 also exactly correct — the manifest-aware reader only matters inside a
 crash window.
 
-Scale shape: compaction reads each sink once and writes ``n_output``
-files — run it from the bus's maintenance cadence (every K batches or
-nightly), never concurrently with itself (single-writer bus, same
-operational rule as the index compaction in operators/dedup.py).
+Scale shape: the fold runs on the driver with pyarrow, no Spark job.
+It streams the foldable batch files row group by row group, whether
+pyarrow or Spark wrote them, through one ``ParquetWriter``: memory is
+one row group and each generation is one file, as the ``coalesce(1)``
+Spark write it replaces gave (a single task too).  Run it from the
+bus's maintenance cadence (every K batches or nightly), never
+concurrently with itself (single-writer bus, same operational rule as
+the index compaction in operators/dedup.py).
 """
 
 from __future__ import annotations
@@ -39,6 +43,7 @@ from __future__ import annotations
 import json
 import os
 import shutil
+import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -92,17 +97,66 @@ def read_sink_current(spark: SparkSession, sink_dir: str) -> DataFrame | None:
     return df.where(live)
 
 
-def compact_curation_sinks(
-    spark: SparkSession, out_base: str, n_output_files: int = 1
-) -> dict:
+# The fold flushes its buffered input batches as one output row group
+# once they reach this many bytes in memory.
+_FOLD_RG_BYTES = 64 << 20
+
+
+def _fold_batches(sink_dir: str, foldable: list[int], gen: int, cols) -> int:
+    """Stream every row of the ``foldable`` batch dirs, cast to the
+    sink's declared ``cols`` ((name, pyarrow type) pairs), into ONE file
+    of a fresh ``batch_id=<gen>`` dir: any leftover dir of an
+    uncommitted run is cleared first, the file is written under a
+    hidden staged name and renamed into place.  Returns the rows
+    folded."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from frizzle_spark.operators.dedup import _list_index_files
+
+    schema = pa.schema(list(cols))
+    names = schema.names
+    gen_dir = os.path.join(sink_dir, f"batch_id={gen}")
+    shutil.rmtree(gen_dir, ignore_errors=True)
+    os.makedirs(gen_dir)
+    name = f"part-{gen}.parquet"
+    staged = os.path.join(gen_dir, f".{name}.{uuid.uuid4().hex}.staging")
+    wanted = set(foldable)
+    n = 0
+    buf: list = []
+    buf_bytes = 0
+    with pq.ParquetWriter(staged, schema) as writer:
+        for path, b in _list_index_files(sink_dir, "batch_id"):
+            if b not in wanted:
+                continue
+            with pq.ParquetFile(path) as f:
+                for rb in f.iter_batches(columns=names, use_threads=False):
+                    buf.append(rb.select(names).cast(schema))
+                    buf_bytes += rb.nbytes
+                    n += rb.num_rows
+                    if buf_bytes >= _FOLD_RG_BYTES:
+                        writer.write_table(pa.Table.from_batches(buf, schema))
+                        buf, buf_bytes = [], 0
+        if buf:
+            writer.write_table(pa.Table.from_batches(buf, schema))
+    os.replace(staged, os.path.join(gen_dir, name))
+    return n
+
+
+def compact_curation_sinks(spark: SparkSession, out_base: str) -> dict:
     """Fold the committed per-batch partition directories of BOTH
-    curation sinks into one fresh generation each.  Returns per-sink
-    {folded: n_dirs, rows: n} accounting."""
-    from frizzle_spark.streaming.curation import _read_ingest_meta
+    curation sinks into one fresh generation each (module doc).  The
+    fold runs on the driver; ``spark`` is not used by it.  Returns
+    per-sink {folded: n_dirs, rows: n} accounting."""
+    from frizzle_spark.streaming.curation import (
+        _CORPUS_COLS,
+        _DLQ_COLS,
+        _read_ingest_meta,
+    )
 
     watermark = int(_read_ingest_meta(out_base).get("committed_batch", -1))
     stats: dict = {}
-    for sink in ("corpus", "dlq"):
+    for sink, cols in (("corpus", _CORPUS_COLS), ("dlq", _DLQ_COLS)):
         sink_dir = os.path.join(out_base, sink)
         m = _read_sink_manifest(sink_dir)
         # resume a crashed delete step: a crash between the manifest
@@ -123,12 +177,7 @@ def compact_curation_sinks(
             stats[sink] = {"folded": 0, "rows": 0}
             continue
         gen = min([-1] + [g - 1 for g in m["live_gens"]])
-        cur = read_sink_current(spark, sink_dir)
-        fold_df = cur.where(F.col("batch_id").isin(foldable)).drop("batch_id")
-        n = fold_df.count()
-        fold_df.coalesce(n_output_files).write.mode("overwrite").parquet(
-            os.path.join(sink_dir, f"batch_id={gen}")
-        )
+        n = _fold_batches(sink_dir, foldable, gen, cols)
         # commit: the generation becomes live and the batches folded in
         # ONE atomic manifest replace
         _write_sink_manifest(
@@ -143,5 +192,5 @@ def compact_curation_sinks(
             shutil.rmtree(
                 os.path.join(sink_dir, f"batch_id={b}"), ignore_errors=True
             )
-        stats[sink] = {"folded": len(foldable), "rows": int(n)}
+        stats[sink] = {"folded": len(foldable), "rows": n}
     return stats

@@ -201,7 +201,8 @@ def _read_list_files(paths) -> tuple[np.ndarray, np.ndarray]:
 
     ids, mats = [], []
     for p in paths:
-        tb = pq.read_table(p, columns=["vec_id", "u"])
+        with pq.ParquetFile(p) as f:
+            tb = f.read(columns=["vec_id", "u"], use_threads=False)
         if tb.num_rows == 0:
             continue
         ids.append(tb["vec_id"].to_numpy())
@@ -619,11 +620,13 @@ def _load_centroids(index_base: str) -> np.ndarray:
     import pyarrow.parquet as pq
 
     cdir = os.path.join(index_base, "centroids")
-    tabs = [
-        pq.read_table(os.path.join(cdir, f))
-        for f in sorted(os.listdir(cdir))
-        if f.endswith(".parquet")
-    ]
+    tabs = []
+    for f in sorted(os.listdir(cdir)):
+        if f.endswith(".parquet"):
+            with pq.ParquetFile(os.path.join(cdir, f)) as pf:
+                tabs.append(
+                    pf.read(columns=["cluster", "centroid"], use_threads=False)
+                )
     tb = pa.concat_tables(tabs)
     order = np.argsort(tb["cluster"].to_numpy())
     return _arrow_matrix(tb["centroid"])[order]

@@ -465,11 +465,20 @@ def test_local_index_append_probe_identical(spark, sf_dir, tmp_path):
         assert a == b, f"layouts diverge under probe_mode={mode}"
 
 
-def test_index_compaction_probe_identity(spark, sf_dir, tmp_path):
+def _compaction_tier(tier, monkeypatch):
+    """Pin compact_minhash_index's tier: the driver rebuild under the
+    default cap, the Spark rewrite with the cap forced to 0."""
+    if tier == "spark":
+        monkeypatch.setattr(dd, "PROBE_LOCAL_MAX_INDEX_BYTES", 0)
+
+
+@pytest.mark.parametrize("tier", ["local", "spark"])
+def test_index_compaction_probe_identity(spark, sf_dir, tmp_path, tier, monkeypatch):
     """compact_minhash_index must be invisible to the probe: identical
-    pair sets before and after, under every probe tier, while the
-    band-file count collapses (the append-accumulated small files are
-    the thing being fixed)."""
+    pair sets before and after, under every probe tier and on both
+    compaction tiers, while the band-file count collapses (the
+    append-accumulated small files are the thing being fixed)."""
+    _compaction_tier(tier, monkeypatch)
     base = str(tmp_path / "mh_index")
     docs = dd.load_table(spark, sf_dir, "documents").select("doc_id", "text")
     half_a = docs.where(F.col("doc_id") % 2 == 0)
@@ -495,9 +504,114 @@ def test_index_compaction_probe_identity(spark, sf_dir, tmp_path):
     stats = dd.compact_minhash_index(spark, base)
     files_after = len(dd._list_index_files(f"{base}/bands", "band_id"))
     assert files_after < files_before
-    assert stats["bands_rows"] > 0
+    assert stats["tier"] == tier
+    assert stats["bands_rows"] == dd.LSH_BANDS * stats["signatures_rows"] > 0
     for m in ("full", "bitmap", "rowgroup"):
         assert pairs(m) == before[m], f"compaction changed pairs under {m}"
+
+
+def _sig_arrays(spark, docs):
+    """(ids, mat) of ``docs``' signatures, collected for the driver
+    writer."""
+    import numpy as np
+
+    tb = dd.minhash_signatures(dd.shingles_of(docs, distinct=False)).toArrow()
+    ids = tb["doc_id"].to_numpy().astype(np.int64)
+    mat = np.column_stack(
+        [tb[f"h{k}"].to_numpy(zero_copy_only=False)
+         for k in range(dd.MINHASH_PERMS)]
+    ).astype(np.int64)
+    return ids, mat
+
+
+def test_mixed_index_compaction_tiers_identical(spark, sf_dir, tmp_path, monkeypatch):
+    """An index holding BOTH Spark-written and driver-written files must
+    compact to the same probe answers and row counts on either tier, and
+    the driver rebuild must run no Spark job at all."""
+    import shutil
+
+    docs = dd.load_table(spark, sf_dir, "documents").select("doc_id", "text")
+    base = str(tmp_path / "mixed")
+    dd.materialize_minhash_index(docs.where(F.col("doc_id") % 3 == 0), base)
+    dd.append_minhash_index(docs.where(F.col("doc_id") % 3 == 1), base)
+    assert dd.append_minhash_index_local(
+        *_sig_arrays(spark, docs.where(F.col("doc_id") % 3 == 2)), base
+    ) > 0
+    copies = {t: str(tmp_path / t) for t in ("local", "spark")}
+    for c in copies.values():
+        shutil.copytree(base, c)
+    probe = docs.limit(15).select(
+        (F.col("doc_id") + F.lit(910_000)).alias("doc_id"),
+        F.concat("text", F.lit(" probe tail")).alias("text"),
+    )
+    pids, pmat = _sig_arrays(spark, probe)
+
+    def pairs(idx):
+        return (
+            sorted(
+                tuple(r)
+                for r in dd.incremental_neardup(
+                    spark, probe, idx, probe_mode="full"
+                ).collect()
+            ),
+            sorted(dd.incremental_neardup_local(pids, pmat, idx)),
+        )
+
+    want = pairs(base)
+    assert want[0], "probe must surface pairs"
+    sc = spark.sparkContext
+    sc.setJobGroup("local-index-compaction", "job-count gate")
+    try:
+        got_local = dd.compact_minhash_index(spark, copies["local"])
+    finally:
+        sc.setJobGroup(None, None)
+    assert sc.statusTracker().getJobIdsForGroup("local-index-compaction") == []
+    monkeypatch.setattr(dd, "PROBE_LOCAL_MAX_INDEX_BYTES", 0)
+    got_spark = dd.compact_minhash_index(spark, copies["spark"])
+    assert (got_local["tier"], got_spark["tier"]) == ("local", "spark")
+    for k in ("bands_rows", "signatures_rows", "files_before"):
+        assert got_local[k] == got_spark[k], k
+    assert pairs(copies["local"]) == want
+    assert pairs(copies["spark"]) == want
+
+
+@pytest.mark.parametrize("tier", ["local", "spark"])
+def test_index_compaction_heals_truncated_append(spark, tmp_path, tier, monkeypatch):
+    """A crash inside an append after its signature file but before its
+    band files leaves signatures the probe cannot reach.  The driver
+    rebuild re-derives the bands from the signatures, so the next probe
+    finds the pair; the Spark rewrite cannot, and its row-count check
+    refuses to swap (the live index stays as it was)."""
+    import glob
+    import os
+
+    words = "alpha beta gamma delta epsilon zeta eta theta iota kappa".split()
+    rows = [
+        (i, " ".join(f"{w}{i}" for w in words * 2)) for i in range(6)
+    ]
+    docs = spark.createDataFrame(rows, "doc_id long, text string")
+    base = str(tmp_path / "trunc")
+    dd.materialize_minhash_index(docs.where(F.col("doc_id") < 4), base)
+    dd.append_minhash_index_local(
+        *_sig_arrays(spark, docs.where(F.col("doc_id") >= 4)), base
+    )
+    for p in glob.glob(f"{base}/bands/band_id=*/part-local-*.parquet"):
+        os.remove(p)
+    pids, pmat = _sig_arrays(
+        spark,
+        spark.createDataFrame([(105, rows[5][1] + " tail")], "doc_id long, text string"),
+    )
+    assert dd.incremental_neardup_local(pids, pmat, base) == []
+    _compaction_tier(tier, monkeypatch)
+    if tier == "spark":
+        with pytest.raises(ValueError, match="band rows"):
+            dd.compact_minhash_index(spark, base)
+        assert dd.incremental_neardup_local(pids, pmat, base) == []
+        return
+    stats = dd.compact_minhash_index(spark, base)
+    assert stats["signatures_rows"] == 6
+    assert stats["bands_rows"] == 6 * dd.LSH_BANDS
+    assert [(n, o) for n, o, _ in dd.incremental_neardup_local(pids, pmat, base)] == [(105, 5)]
 
 
 def test_local_probe_identity(spark, sf_dir, tmp_path):
@@ -1629,14 +1743,17 @@ def test_minhash_index_format_stamp(spark, tmp_path):
     dd.incremental_neardup(spark, new_docs, base).count()
 
 
-def test_rg_manifest_probe_identity_and_fallback(spark, sf_dir, tmp_path):
+@pytest.mark.parametrize("tier", ["local", "spark"])
+def test_rg_manifest_probe_identity_and_fallback(spark, sf_dir, tmp_path, tier, monkeypatch):
     """VERDICT r10 #2: the compaction-written row-group manifest must be
     invisible to probe SEMANTICS — identical pairs (a) via the manifest
     fast path, (b) with the manifest deleted (footer fallback), and
     (c) after a post-compaction append whose files the manifest does
-    not cover (mixed manifest + footer dispatch)."""
+    not cover (mixed manifest + footer dispatch) — on both compaction
+    tiers."""
     import os
 
+    _compaction_tier(tier, monkeypatch)
     base = str(tmp_path / "mh_man")
     docs = dd.load_table(spark, sf_dir, "documents").select("doc_id", "text")
     dd.materialize_minhash_index(docs.where(F.col("doc_id") % 2 == 0), base)

@@ -420,15 +420,17 @@ def test_empty_and_shortdoc_first_slices(spark, tmp_path):
     assert got[7] == ("dlq", "dup_index", 6)
 
 
-def test_sink_compaction_preserves_assignment(spark, ingested, tmp_path):
+def test_sink_compaction_preserves_assignment(spark, ingested, tmp_path, monkeypatch):
     """VERDICT r9 #9: folding the per-batch corpus/DLQ partition dirs
-    must preserve ingest_assignment BIT-FOR-BIT, through every stage of
-    the crash-window protocol (generation written but manifest
-    unpublished; manifest published but folded dirs undeleted; full
-    cleanup), and a committed-batch replay after compaction must remain
-    a no-op."""
+    must preserve ingest_assignment BIT-FOR-BIT — over batch dirs that
+    pyarrow AND Spark wrote, past a leftover uncommitted generation dir,
+    with no Spark job — through every stage of the crash-window protocol
+    (generation written but manifest unpublished; manifest published but
+    folded dirs undeleted; full cleanup), and a committed-batch replay
+    after compaction must remain a no-op."""
     import shutil
 
+    import frizzle_spark.streaming.curation as cur
     from frizzle_spark.streaming.curation_compact import (
         _read_sink_manifest,
         _write_sink_manifest,
@@ -437,18 +439,39 @@ def test_sink_compaction_preserves_assignment(spark, ingested, tmp_path):
     )
 
     root, docs = ingested
-    # work on a copy — `ingested` is module-scoped and shared
+    # the eager twin of the `ingested` replay, with batch 1's corpus
+    # forced onto the distributed Spark write
     r = str(tmp_path / "copy")
-    shutil.copytree(f"{root}/out", f"{r}/out")
-    shutil.copytree(f"{root}/index", f"{r}/index")
+    for k in range(N_SLICES):
+        with monkeypatch.context() as mp:
+            if k == 1:
+                mp.setattr(cur, "LOCAL_TEXT_MAX_BYTES", 0)
+            dedup_ingest_batch(
+                spark, _slice(docs, k), f"{r}/index", f"{r}/out", k
+            )
+    assert os.path.exists(f"{r}/out/corpus/batch_id=1/_SUCCESS")
     want = _assignment_map(ingest_assignment(spark, f"{r}/out"))
+    assert want == _assignment_map(ingest_assignment(spark, f"{root}/out"))
     n_dirs_before = len(
         [d for d in os.listdir(f"{r}/out/corpus") if d.startswith("batch_id=")]
     )
     assert n_dirs_before == N_SLICES
+    # a crashed earlier run's generation dir, never committed
+    shutil.copytree(f"{r}/out/corpus/batch_id=0", f"{r}/out/corpus/batch_id=-1")
+    assert _assignment_map(ingest_assignment(spark, f"{r}/out")) == want
 
-    stats = compact_curation_sinks(spark, f"{r}/out")
+    sc = spark.sparkContext
+    sc.setJobGroup("sink-compaction", "job-count gate")
+    try:
+        stats = compact_curation_sinks(spark, f"{r}/out")
+    finally:
+        sc.setJobGroup(None, None)
+    assert sc.statusTracker().getJobIdsForGroup("sink-compaction") == []
     assert stats["corpus"]["folded"] == N_SLICES
+    assert stats["corpus"]["rows"] == sum(
+        v[0] == "corpus" for v in want.values()
+    )
+    assert os.listdir(f"{r}/out/corpus/batch_id=-1") == ["part--1.parquet"]
     assert _assignment_map(ingest_assignment(spark, f"{r}/out")) == want
     # all per-batch dirs folded into one generation
     dirs_after = [
